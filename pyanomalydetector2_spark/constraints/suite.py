@@ -1,16 +1,32 @@
-"""Constraint-suite runner: one distributed pass per check family, verdicts +
-violation rows out, checkpoint/resume at partition-bucket granularity.
+"""Constraint-suite runner: one shared aggregation pass per snapshot, one
+violations job, one verdict job; verdicts + violation rows out,
+checkpoint/resume at partition-bucket granularity.
 
 Execution shape (the scale story):
 - ALL row checks ride ONE scan: each predicate compiles to a struct-in-array
   element, failures explode into violation rows. The decoded-PCM invariant
   columns are attached by a single Arrow-batched UDF pass; ``bytes`` is never
-  read by any other family (column pruning).
-- Stat/drift/uniqueness/referential checks run directly against the source
-  table with COLUMN-PRUNED scans (no cache): measured on this hardware, a
-  pruned parquet re-scan is ~10× cheaper than building + reading a
-  deserialized in-memory cache of all columns, and at 100 TB the same holds
-  more strongly — each family's scan reads only its own few columns.
+  read by any other family (column pruning). Row, uniqueness, referential,
+  FD and reconcile violations form ONE cached union, filled by a background
+  job while the aggregation passes run — it holds the decode UDF, the
+  run's longest job, and shares no input with them.
+- Every additive family reads ONE groupBy pass per snapshot
+  (``family_aggregate``): over ``current`` per bucket it yields the row
+  count, the key-column HLL, the moment partials of the stat columns, the
+  uniform-bin counts and the category counts; over ``baseline`` the global
+  bin and category counts. These are the definitions the streaming state
+  components persist, so both engines score the same numbers. Each pass is
+  collected once — O(buckets × (bins + categories)) rows — and every
+  stat/drift verdict leg derives from those rows through the shared
+  scorers. Scans stay COLUMN-PRUNED and uncached: measured on this
+  hardware, a pruned parquet re-scan is ~10× cheaper than building +
+  reading a deserialized in-memory cache of all columns. Sketch-backed
+  profile stats (approx_distinct, quantiles) ride the pass only when a
+  check reads them.
+- The run is bound by per-job fixed cost, not data, so the number of Spark
+  jobs is the cost model: the verdict union is materialized by ONE action
+  (``eager_verdicts``), and every job carries the description
+  ``suite <run_id>: <family>/<phase>``.
 - Verdict assembly happens on the driver over TINY frames (buckets ×
   constraints rows) — the same driver-side funnel the reference uses for
   survivor sets (detect_anomalies.py:79-96); all heavy lifting stays
@@ -23,8 +39,12 @@ Violation rows mirror the reference's anomalies upsert contract
 from __future__ import annotations
 
 import time
+from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,8 +53,10 @@ from pyanomalydetector2_spark.constraints.dsl import Suite
 from pyanomalydetector2_spark.operators.audio import with_audio_invariants
 from pyanomalydetector2_spark.operators.drift import (
     HistSpec,
-    drift_scores_multi,
+    drift_scores_categorical_from_counts,
     drift_scores_quantile,
+    hist_bin,
+    psi_ks,
 )
 from pyanomalydetector2_spark.operators.integrity import (
     fd_det_repr,
@@ -43,7 +65,13 @@ from pyanomalydetector2_spark.operators.integrity import (
     referential_violations,
 )
 from pyanomalydetector2_spark.operators.reconcile import snapshot_diff
-from pyanomalydetector2_spark.operators.stats import column_profile
+from pyanomalydetector2_spark.operators.stats import (
+    PARTIAL_FIELDS,
+    PROFILE_SKETCH_FIELDS,
+    finalize_profile_partial,
+    profile_aggs,
+    stack_profile,
+)
 from pyanomalydetector2_spark.operators.uniqueness import duplicate_rows
 from pyanomalydetector2_spark.streaming.checkpoint import CheckpointLedger
 from pyanomalydetector2_spark.functions import local_rows_df
@@ -82,11 +110,10 @@ class SuiteResult:
     skipped_buckets: list[int]
     row_count: int
     wall_sec: float
-    # frames persisted on behalf of this result's lazy legs (the verdicts
-    # cache; under eager_verdicts=False also the stat profile) — a long-
-    # lived session running many suites should release them once the
-    # result is materialized, or executor storage memory accrues one
-    # cached frame per run
+    # every frame cached on behalf of this result (violations, verdicts
+    # and, under run_suite(cache=True), the input projection) — a
+    # long-lived session running many suites should release them once the
+    # result is persisted, or executor storage memory accrues frames per run
     cached: tuple = ()
 
     def passed(self) -> bool:
@@ -325,21 +352,25 @@ def drift_verdict_frames(
     ]
 
 
+def violation_counts(violations: DataFrame) -> DataFrame:
+    """Violation rows per (bucket, constraint_id) as ``cnt``."""
+    return violations.groupBy("bucket", "constraint_id").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+
+
 def violation_count_verdicts(
-    violations: DataFrame,
+    vcounts: DataFrame,
     bucket_df: DataFrame,
     counted_ids: list[str],
     run_id: str,
 ) -> DataFrame:
-    """(bucket × constraint) grid left-joined to the violation counts so
-    zero-violation cells still emit a passing verdict — all
+    """(bucket × constraint) grid left-joined to the ``violation_counts``
+    frame so zero-violation cells still emit a passing verdict — all
     DataFrame-side, no counts dict on the driver."""
-    spark = violations.sparkSession
+    spark = vcounts.sparkSession
     cid_df = local_rows_df(
         spark, [(c,) for c in counted_ids], "constraint_id string"
-    )
-    vcounts = violations.groupBy("bucket", "constraint_id").agg(
-        F.count(F.lit(1)).alias("cnt")
     )
     grid = bucket_df.crossJoin(F.broadcast(cid_df))
     joined = grid.join(vcounts, ["bucket", "constraint_id"], "left")
@@ -457,6 +488,105 @@ def reconcile_rate_verdicts(
     return out
 
 
+def require_bucketed(n_null: int, bucket_col: str) -> None:
+    """Fail closed on rows without a partition bucket: verdicts, ledger
+    commits and streaming state are all keyed by ``bucket_col``, so such a
+    row can be neither validated nor committed. ``n_null`` comes from a
+    per-bucket aggregate the caller has already collected. Shared by the
+    one-shot runner and the streaming micro-batch path."""
+    if n_null:
+        raise ValueError(
+            f"{n_null} row(s) have a NULL {bucket_col!r} — every row must "
+            "carry its partition bucket (fix the source rows)"
+        )
+
+
+def family_aggregate(
+    df: DataFrame,
+    group_col: str | None,
+    hll_cols: Sequence[str] = (),
+    stat_cols: Sequence[str] = (),
+    stat_fields: Sequence[str] = PARTIAL_FIELDS,
+    specs: Sequence[HistSpec] = (),
+    cat_cols: Sequence[str] = (),
+) -> DataFrame:
+    """ONE groupBy pass over ``df`` for every additive check family.
+
+    Every input row is exploded into one entry per part, keyed by
+    (group ``_g``, ``_part``, ``_key``), and ``_n`` counts each key:
+
+    - part 0 (``_key`` NULL) is the group itself: ``_n`` rows, ``_hll_<i>``
+      (HLL over the string-cast ``hll_cols[i]``) and the ``profile_aggs``
+      fields of ``stat_cols``;
+    - part 1 + j counts the ``hist_bin`` of ``specs[j]`` (``_key`` = bin);
+    - part 1 + len(specs) + i counts the values of ``cat_cols[i]``.
+
+    A NULL ``_key`` outside part 0 counts NULL (or NaN) values — readers
+    skip it. Value columns are masked to NULL outside part 0, so the
+    part-0 aggregates see each row exactly once; the other groups carry
+    empty part-0 buffers (an HLL++ buffer is ~3 KB of zeros, which the
+    shuffle compresses away). The definitions are those
+    of the streaming state components (column_profile_partial,
+    histogram_counts_df, categorical_counts) and of the HLL screen over
+    string-cast keys, so both engines score the same integers and moment
+    partials. Bins and categories are grouping keys, not per-bin
+    aggregates: a ``count_if`` per bin planned slower than the whole
+    pass."""
+    gsel = [F.col(group_col).alias("_g")] if group_col else []
+    gkeys = ["_g"] if group_col else []
+    values = sorted({*hll_cols, *stat_cols})
+    keys = (
+        [F.lit(None).cast("string")]
+        + [hist_bin(s).cast("string") for s in specs]
+        + [F.col(c).cast("string") for c in cat_cols]
+    )
+    own = F.col("_part") == 0
+    rows = df.select(
+        *gsel, *values, F.posexplode(F.array(*keys)).alias("_part", "_key")
+    ).select(
+        *gkeys, "_part", "_key", *[F.when(own, F.col(c)).alias(c) for c in values]
+    )
+    aggs = [F.count(F.lit(1)).alias("_n")]
+    aggs += [
+        F.approx_count_distinct(F.col(c).cast("string"), 0.02).alias(f"_hll_{i}")
+        for i, c in enumerate(hll_cols)
+    ]
+    aggs += profile_aggs(stat_cols, stat_fields)
+    return rows.groupBy(*gkeys, "_part", "_key").agg(*aggs)
+
+
+def _describe(spark, run_id: str, family: str, step: str) -> None:
+    spark.sparkContext.setJobDescription(f"suite {run_id}: {family}/{step}")
+
+
+@contextmanager
+def _job_phases(spark, run_id: str, verbose: bool):
+    """Yields ``phase(family, step)``: every Spark job submitted after it
+    carries the description ``suite <run_id>: <family>/<step>`` (AQE stage
+    and broadcast jobs inherit it). The caller's own description comes
+    back on exit, also on error."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    last = [None, time.time()]
+
+    def tick() -> None:
+        now = time.time()
+        if verbose and last[0]:
+            print(f"[suite] {last[0]}: {now - last[1]:.1f}s", flush=True)
+        last[1] = now
+
+    def phase(family: str, step: str) -> None:
+        tick()
+        last[0] = f"{family}/{step}"
+        _describe(spark, run_id, family, step)
+
+    try:
+        yield phase
+    finally:
+        tick()
+        sc.setJobDescription(caller)
+
+
 def run_suite(
     current: DataFrame,
     baseline: DataFrame,
@@ -484,15 +614,13 @@ def run_suite(
     committed whose violations were never written, and --resume silently
     skips them forever.
 
-    ``eager_verdicts`` (VERDICT r04 #3 — a knob, not a hardcode): True
-    materializes each family's verdict frame sequentially
-    (localCheckpoint) so families execute one job at a time — the shape a
-    small-driver host needs (a lazy union runs every family's table scan
-    concurrently and blew an 8g driver at the 8M-row materialize tier).
-    False leaves the union lazy: one job, families' scans overlap — on a
-    real cluster concurrent family scans are an executor-memory question
-    and the lazy union recovers the overlapped wall-clock. Both paths
-    emit bit-identical verdicts (pytest-pinned).
+    ``eager_verdicts``: True fills the cached verdict union with ONE
+    action before returning, so every job of the run carries this run's
+    job description and the caller reads a filled cache. False leaves the
+    cached union lazy: it fills on the caller's first action. Either way
+    every leg derives from the same collected aggregates and the filled
+    violations cache — the union holds no scan of its own — so both emit
+    bit-identical verdicts (pytest-pinned).
 
     ``sketch_store`` (optional catalog table, SnapshotTable/IcebergTable
     shape): persisted per-column global KLL sketches backing the equi-depth
@@ -501,151 +629,522 @@ def run_suite(
     read KBs of sketch state instead of rescanning the baseline, and
     ``kll_merge`` can fold new baseline snapshots forward out-of-band."""
     t0 = time.time()
-    _last = [t0]
-
-    def _tick(label: str) -> None:
-        now = time.time()
-        if verbose:
-            print(f"[suite] {label}: {now - _last[0]:.1f}s", flush=True)
-        _last[0] = now
-
     spark = current.sparkSession
+    with _job_phases(spark, run_id, verbose) as phase, ThreadPoolExecutor(
+        max_workers=1
+    ) as pool:
+        skipped: list[int] = []
+        if checkpoint is not None:
+            skipped = checkpoint.committed_buckets(run_id)
+            if skipped:
+                current = current.filter(~F.col(bucket_col).isin(skipped))
 
-    skipped: list[int] = []
-    if checkpoint is not None:
-        skipped = checkpoint.committed_buckets(run_id)
-        if skipped:
-            current = current.filter(~F.col(bucket_col).isin(skipped))
-
-    audio_base = row_check_base(current, suite)
-    base = current
-    if cache:  # opt-in only: helps tiny inputs, hurts at scale (see module doc)
-        audio_base = audio_base.cache()
-        base = audio_base
-
-    # ONE aggregation job yields the bucket list, the row count, AND the
-    # per-bucket HLL distinct estimates for bucket-key checks (bucket =
-    # hash(key) % B ⇒ key duplicates co-locate ⇒ global distinct = Σ
-    # per-bucket distinct for key_col ONLY — other columns get a global
-    # sketch below) — and materializes the cache as a side effect.
-    # HLL over the STRING-CAST key (injective for atomic types, so the
-    # distinct count is unchanged) — the streaming suite stores keys
-    # string-cast in its ids state and recomputes this screen from them,
-    # and feeding HLL++ the same hash inputs keeps the two engines'
-    # estimates bit-identical at EVERY cardinality, not just inside the
-    # sparse-exact regime.
-    hll_aggs = [
-        F.approx_count_distinct(F.col(c.column).cast("string"), 0.02).alias(
-            f"_hll_{i}"
+        audio_base = row_check_base(current, suite)
+        base = current
+        cached: list[DataFrame] = []
+        if cache:  # opt-in only: helps tiny inputs, hurts at scale (module doc)
+            audio_base = audio_base.cache()
+            base = audio_base
+            cached.append(audio_base)
+        baseline_rec = (
+            baseline.filter(~F.col(bucket_col).isin(skipped))
+            if skipped
+            else baseline
         )
-        for i, c in enumerate(suite.unique_checks)
-    ]
-    brows = base.groupBy(bucket_col).agg(
-        F.count(F.lit(1)).alias("_n"), *hll_aggs
-    ).collect()
-    buckets = [r[bucket_col] for r in brows]
-    row_count = sum(r["_n"] for r in brows)
-    # Σ per-bucket distinct is exact ONLY for the bucket key itself
-    # (bucket = hash(key_col) co-locates each key in one bucket); any other
-    # column appears in every bucket and the sum would overcount by up to
-    # ×n_buckets — those checks get a global sketch in one extra tiny agg
-    non_key = [
-        i for i, c in enumerate(suite.unique_checks) if c.column != key_col
-    ]
-    grow = (
-        base.agg(
-            *[
-                F.approx_count_distinct(
-                    F.col(suite.unique_checks[i].column).cast("string"), 0.02
-                ).alias(f"_g_{i}")
-                for i in non_key
+
+        # ---- every violation-row family in ONE cached union, filled in a
+        # background job while the fused passes below run: it holds the
+        # decode UDF, the run's longest job, and shares no input with them
+        violations = _violation_union(
+            base, audio_base, current, baseline_rec, dims, suite, run_id,
+            key_col, bucket_col, salt_buckets,
+        ).cache()
+        cached.append(violations)
+        vcounts = violation_counts(violations)
+        # the per-(bucket, constraint) counts are the action that fills the
+        # cache, so the count verdicts cost no job of their own
+        vio_filled = pool.submit(
+            _in_phase,
+            spark,
+            spark.sparkContext._jsc.sc().getLocalProperties().clone(),
+            run_id,
+            "violations",
+            "materialize",
+            vcounts.collect,
+        )
+
+        from pyanomalydetector2_spark.constraints.dsl import (
+            parse_percentile_stat,
+        )
+
+        pct_checks = [
+            c for c in suite.stat_checks
+            if parse_percentile_stat(c.stat) is not None
+        ]
+        moment_checks = [
+            c for c in suite.stat_checks if parse_percentile_stat(c.stat) is None
+        ]
+        stat_cols = sorted({c.column for c in moment_checks})
+        # sketch-backed profile stats ride the pass only when a check reads
+        # them; every other stat derives from the moment partials
+        stat_fields = PARTIAL_FIELDS + tuple(
+            f for f in PROFILE_SKETCH_FIELDS
+            if any(c.stat == f for c in moment_checks)
+        )
+        cat = [c for c in suite.drift_checks if c.categorical]
+        numeric = [c for c in suite.drift_checks if not c.categorical]
+        uniform = [c for c in numeric if not c.equi_depth and not c.distributed]
+        equi = [c for c in numeric if c.equi_depth and not c.distributed]
+        dist = [c for c in numeric if c.distributed]
+        specs = [HistSpec(c.column, c.lo, c.hi, c.nbins) for c in uniform]
+        cat_cols = sorted({c.column for c in cat})
+
+        # ---- ONE shared pass over current: bucket list + row count, the
+        # key-column HLL, moment partials, uniform bins, category counts —
+        # collected once (O(buckets × (bins + categories)) rows), every
+        # verdict leg below derives from these rows. Σ per-bucket distinct
+        # is exact ONLY for the bucket key itself (bucket = hash(key)
+        # co-locates each key in one bucket); any other unique column gets
+        # a global sketch below. HLL runs over the STRING-CAST key
+        # (injective for atomic types) — the streaming suite stores keys
+        # string-cast and recomputes this screen from them, so both
+        # engines feed HLL++ identical inputs at every cardinality.
+        phase("fused", "current")
+        hll_cols = (
+            [key_col]
+            if any(c.column == key_col for c in suite.unique_checks)
+            else []
+        )
+        cur_agg = family_aggregate(
+            base, bucket_col, hll_cols, stat_cols, stat_fields, specs, cat_cols
+        )
+        cur_rows = cur_agg.collect()
+        own = [r for r in cur_rows if r["_part"] == 0]
+        require_bucketed(
+            sum(r["_n"] for r in own if r["_g"] is None), bucket_col
+        )
+        buckets = sorted(int(r["_g"]) for r in own)
+        row_count = sum(r["_n"] for r in own)
+        if not buckets:  # everything committed already — idempotent no-op
+            vio_filled.result()
+            for df in cached:
+                df.unpersist()
+            empty_ver = spark.createDataFrame([], VERDICT_SCHEMA)
+            empty_vio = spark.createDataFrame([], VIOLATION_SCHEMA)
+            return SuiteResult(run_id, empty_ver, empty_vio, [], skipped, 0, 0.0)
+
+        # Verdicts are assembled as a UNION of per-family DataFrames:
+        # driver memory never scales with buckets × constraints.
+        # ``verdict_rows`` keeps the scalar rows the driver already holds
+        # (HLL metric, uniform drift scores, ANN recall).
+        verdict_frames: list[DataFrame] = []
+        verdict_rows: list[tuple] = []
+        bucket_df = local_rows_df(spark, [(b,) for b in buckets], "bucket int")
+
+        # ---- uniqueness HLL screen: a recorded metric, never the verdict.
+        # At 10^12 rows it is the early-exit for grossly-duplicated inputs,
+        # but HLL's ~2% relative error cannot certify uniqueness at
+        # realistic dup rates — the exact duplicate_rows pass decides.
+        non_key = sorted(
+            {c.column for c in suite.unique_checks if c.column != key_col}
+        )
+        global_hll = {}
+        if non_key:
+            phase("uniqueness", "global_hll")
+            grow = base.agg(
+                *[
+                    F.approx_count_distinct(F.col(c).cast("string"), 0.02).alias(
+                        f"_g_{i}"
+                    )
+                    for i, c in enumerate(non_key)
+                ]
+            ).first()
+            global_hll = {c: grow[f"_g_{i}"] for i, c in enumerate(non_key)}
+        for c in suite.unique_checks:
+            est = (
+                sum(r["_hll_0"] for r in own)
+                if c.column == key_col
+                else global_hll[c.column]
+            )
+            verdict_rows.append(
+                (
+                    run_id,
+                    -1,  # whole-table metric, not per-bucket
+                    c.constraint_id,
+                    "hll_approx_distinct",
+                    float(est),
+                    float(row_count),
+                    True,  # informational; exact pass decides
+                    0,
+                )
+            )
+
+        # ---- ONE pass over baseline: its global bins and category counts
+        base_rows = []
+        if specs or cat_cols:
+            phase("fused", "baseline")
+            base_rows = family_aggregate(
+                baseline, None, specs=specs, cat_cols=cat_cols
+            ).collect()
+
+        # ---- stat checks: moment partials from the fused pass -------------
+        if moment_checks:
+            wide_cols = [f"{c}__{f}" for c in stat_cols for f in stat_fields]
+            wide = local_rows_df(
+                spark,
+                [(int(r["_g"]), *[r[w] for w in wide_cols]) for r in own],
+                T.StructType(
+                    [T.StructField("bucket", T.IntegerType())]
+                    + [cur_agg.schema[w] for w in wide_cols]
+                ),
+            )
+            prof = finalize_profile_partial(
+                stack_profile(wide, stat_cols, stat_fields, ["bucket"])
+            )
+            verdict_frames.extend(
+                stat_verdict_frames(prof, moment_checks, run_id, "bucket")
+            )
+        if pct_checks:
+            # percentile stats ride the mergeable KLL sketch — the SAME
+            # sketch the streaming suite merges per micro-batch, so
+            # exact-regime verdicts agree bit-for-bit between the engines
+            sk = percentile_sketches(
+                base, sorted({c.column for c in pct_checks}), bucket_col
+            )
+            pframe = percentile_stat_frame(sk, pct_checks, bucket_df)
+            verdict_frames.extend(
+                stat_verdict_frames(pframe, pct_checks, run_id, "bucket")
+            )
+
+        # ---- uniform drift: the fused passes' bins, scored on the driver --
+        # a column with no baseline bins has no histogram to compare
+        # against; a check that scores in NO bucket means the column is
+        # empty/all-null in every current bucket — both raise, because
+        # silence here would let a misconfigured snapshot pass the suite
+        def _keyed(rows, part: int) -> list:
+            return [r for r in rows if r["_part"] == part and r["_key"] is not None]
+
+        def _bins(rows, part: int, nbins: int) -> dict:
+            out: dict = {}
+            for r in _keyed(rows, part):
+                h = out.setdefault(
+                    r.asDict().get("_g"), np.zeros(nbins + 2, dtype=np.int64)
+                )
+                h[int(r["_key"])] = r["_n"]
+            return out
+
+        base_h = [_bins(base_rows, 1 + j, s.nbins) for j, s in enumerate(specs)]
+        for s, h in zip(specs, base_h):
+            if None not in h:
+                raise ValueError(
+                    f"drift baseline for column {s.column!r} is empty or "
+                    "all-null — no histogram to compare against (fix the "
+                    "baseline snapshot)"
+                )
+        for j, c in enumerate(uniform):
+            cur_h = _bins(cur_rows, 1 + j, c.nbins)
+            if not cur_h:
+                raise ValueError(
+                    f"drift check {c.constraint_id!r} produced no score — "
+                    f"column {c.column!r} is empty/all-null in the baseline "
+                    "or in every current bucket (fix the snapshot or drop "
+                    "the check)"
+                )
+            for b, counts in cur_h.items():
+                verdict_rows += _drift_rows(
+                    run_id, int(b), c, *psi_ks(counts, base_h[j][None])
+                )
+
+        # ---- categorical drift: the fused passes' category counts --------
+        # frequency-PSI + linf (reported in the ks verdict slot — the
+        # order-free analog, bounded by ks_max), scored DataFrame-side and
+        # collected here (buckets rows), while the violations job still runs
+        for c in cat:
+            phase("drift", "categorical")
+            part = 1 + len(specs) + cat_cols.index(c.column)
+            scores = drift_scores_categorical_from_counts(
+                local_rows_df(
+                    spark,
+                    [(int(r["_g"]), r["_key"], r["_n"])
+                     for r in _keyed(cur_rows, part)],
+                    "bucket int, cat string, cur_cat_n long",
+                ),
+                local_rows_df(
+                    spark,
+                    [(r["_key"], r["_n"]) for r in _keyed(base_rows, part)],
+                    "cat string, base_cat_n long",
+                ),
+                c.column,
+                group_col="bucket",
+                baseline_is_counts=True,
+            )
+            frame = local_rows_df(spark, scores.collect(), scores.schema)
+            verdict_frames.extend(
+                drift_verdict_frames(frame, c, run_id, "bucket", "linf")
+            )
+
+        # ---- equi-depth / distributed drift: their own binning passes ----
+        def _equi_edges_map() -> dict[tuple[str, int], list[float] | None]:
+            """Equi-depth edges from the persisted KLL store when one is
+            wired (``sketch_store``): hit → KBs of sketch state replace the
+            baseline percentile_approx rescan; miss → bootstrap so every
+            later run is a hit. ALL missing columns bootstrap in ONE
+            kll_build_multi pass — the Arrow transfer dominates a sketch
+            build (BENCH §24), so E equi-depth columns must not pay E
+            baseline scans. No store → all None (inline edge derivation)."""
+            wanted = [
+                (c.column, c.nbins)
+                for c in equi + [c for c in dist if c.equi_depth]
             ]
-        ).first()
-        if non_key
-        else None
-    )
-    hll_totals = [
-        (
-            sum(r[f"_hll_{i}"] for r in brows)
-            if c.column == key_col
-            else grow[f"_g_{i}"]
+            edges_map: dict[tuple[str, int], list[float] | None] = {
+                w: None for w in wanted
+            }
+            if sketch_store is None or not wanted:
+                return edges_map
+            from pyanomalydetector2_spark.operators.drift import (
+                quantile_edges_from_sketch,
+            )
+            from pyanomalydetector2_spark.operators.kll import (
+                SKETCH_FIELDS,
+                kll_build_multi,
+            )
+
+            def _resolve() -> None:
+                state = sketch_store.read(spark)
+                for col, nbins in wanted:
+                    if edges_map[(col, nbins)]:
+                        continue
+                    e = quantile_edges_from_sketch(
+                        state.filter(F.col("column") == col).select(
+                            *SKETCH_FIELDS
+                        ),
+                        nbins,
+                    )
+                    if e:
+                        edges_map[(col, nbins)] = e
+
+            if sketch_store.current_snapshot() is not None:
+                _resolve()
+            missing = sorted({col for (col, _), e in edges_map.items() if not e})
+            if missing:
+                sk = kll_build_multi(baseline, missing, (), k=4096)
+                sketch_store.merge_upsert(sk, keys=["column"])
+                _resolve()
+            return edges_map
+
+        equi_edges_map = {}
+        if equi or any(c.equi_depth for c in dist):
+            phase("drift", "equi_edges")
+            equi_edges_map = _equi_edges_map()
+        for c in equi:
+            phase("drift", "equi_depth")
+            for sc in drift_scores_quantile(
+                base, baseline, c.column, c.nbins, group_col=bucket_col,
+                edges=equi_edges_map[(c.column, c.nbins)],
+            ):
+                verdict_rows += _drift_rows(
+                    run_id, int(sc["group"]), c, sc["psi"], sc["ks"]
+                )
+        for c in dist:
+            # no-histogram-collect path (high-cardinality bucket columns):
+            # scores AND verdicts stay DataFrame-side
+            from pyanomalydetector2_spark.operators.drift import (
+                drift_scores_df,
+                drift_scores_quantile_df,
+            )
+
+            phase("drift", "distributed")
+            frame = (
+                drift_scores_quantile_df(
+                    base, baseline, c.column, c.nbins, group_col=bucket_col,
+                    edges=equi_edges_map[(c.column, c.nbins)],
+                )
+                if c.equi_depth
+                else drift_scores_df(
+                    base, baseline, c.column, c.lo, c.hi, c.nbins,
+                    group_col=bucket_col,
+                )
+            )
+            verdict_frames.extend(
+                drift_verdict_frames(frame, c, run_id, bucket_col, "ks")
+            )
+
+        # ---- ANN recall audit (opt-in: needs an embeddings table) ---------
+        # Corpus-level metric → bucket -1 (not a per-bucket verdict;
+        # excluded from checkpoint commit marks, included in passed()).
+        if suite.ann_checks:
+            if embeddings is None:
+                raise ValueError(
+                    "suite has ann_checks but run_suite received no "
+                    "embeddings table — pass embeddings=... (skipping an "
+                    "enabled check would vacuously pass the suite)"
+                )
+            from pyanomalydetector2_spark.operators.similarity import (
+                brute_force_topk,
+                ivf_topk,
+                lsh_bucketed_topk,
+                recall_audit,
+                sample_queries,
+            )
+
+            phase("ann", "recall")
+            for c in suite.ann_checks:
+                q = sample_queries(embeddings, c.n_queries)
+                exact = brute_force_topk(embeddings, q, k=c.k)
+                if c.method == "lsh":
+                    ann = lsh_bucketed_topk(
+                        embeddings, q, dims=c.dims, k=c.k, planes=c.planes
+                    )
+                elif c.method == "ivf":
+                    ann = ivf_topk(
+                        embeddings, q, k=c.k, n_cells=c.n_cells,
+                        nprobe=c.nprobe,
+                    )
+                else:
+                    raise ValueError(f"unknown ann method {c.method!r}")
+                row = recall_audit(ann, exact).agg(
+                    F.avg("recall").alias("r")
+                ).first()
+                mean_r = (
+                    float(row["r"]) if row and row["r"] is not None else 0.0
+                )
+                verdict_rows.append(
+                    (
+                        run_id,
+                        -1,
+                        c.constraint_id,
+                        f"recall_at_{c.k}",
+                        mean_r,
+                        c.min_recall,
+                        mean_r >= c.min_recall,
+                        0,
+                    )
+                )
+
+        # ---- violation-count and reconcile-rate verdicts read the FILLED
+        # violations cache (the diff join never runs twice). Reconcile ids
+        # are deliberately NOT counted — pass/fail is the rate bound.
+        vcounts = local_rows_df(spark, vio_filled.result(), vcounts.schema)
+        counted_ids = (
+            [c.constraint_id for c in suite.row_checks]
+            + [c.constraint_id for c in suite.unique_checks]
+            + [c.constraint_id for c in suite.ref_checks]
+            + [c.constraint_id for c in suite.fd_checks]
         )
-        for i, c in enumerate(suite.unique_checks)
-    ]
-    _tick(f"materialize base ({row_count} rows)")
-    if not buckets:  # everything committed already — idempotent no-op
-        empty_ver = spark.createDataFrame([], VERDICT_SCHEMA)
-        empty_vio = spark.createDataFrame([], VIOLATION_SCHEMA)
-        return SuiteResult(run_id, empty_ver, empty_vio, [], skipped, 0, 0.0)
+        if counted_ids:
+            verdict_frames.append(
+                violation_count_verdicts(vcounts, bucket_df, counted_ids, run_id)
+            )
+        if suite.reconcile_checks:
+            verdict_frames.extend(
+                reconcile_rate_verdicts(
+                    violations, bucket_df, baseline_rec,
+                    suite.reconcile_checks, run_id, bucket_col,
+                )
+            )
 
-    violation_frames: list[DataFrame] = []
-    # Verdicts are assembled as a UNION of per-family aggregate DataFrames
-    # (VERDICT r03 next-round #7): driver memory no longer scales with
-    # buckets × constraints. ``verdict_rows`` keeps only the handful of
-    # scalar whole-table rows (HLL metric, ANN recall); the bucket-shaped
-    # families build frames in ``verdict_frames``.
-    verdict_frames: list[DataFrame] = []
-    verdict_rows: list[tuple] = []
-    stat_prof: DataFrame | None = None
-    bucket_df = local_rows_df(
-        spark, [(int(b),) for b in buckets], "bucket int"
+        # ---- ONE verdict union, cached; eager fills it in one job ---------
+        # O(buckets × constraints) rows: one partition, so every consumer
+        # (a persist, the ledger's fail counts) runs one task, not one per
+        # leg partition
+        verdicts = local_rows_df(spark, verdict_rows, VERDICT_SCHEMA)
+        for vf in verdict_frames:
+            verdicts = verdicts.unionByName(vf)
+        verdicts = verdicts.coalesce(1).cache()
+        cached.append(verdicts)
+        if eager_verdicts:
+            phase("verdicts", "materialize")
+            verdicts.count()
+
+        if checkpoint is not None and commit:
+            phase("checkpoint", "commit")
+            _mark_committed(checkpoint, run_id, verdicts, buckets, row_count)
+
+    return SuiteResult(
+        run_id,
+        verdicts,
+        violations,
+        buckets,
+        skipped,
+        row_count,
+        time.time() - t0,
+        cached=tuple(cached),
     )
 
+
+def _drift_rows(run_id: str, bucket: int, c, psi: float, ks: float) -> list:
+    """The psi and ks VERDICT_SCHEMA rows of one driver-scored drift check."""
+    return [
+        (run_id, bucket, c.constraint_id, "psi", psi, c.psi_max,
+         psi <= c.psi_max, 0),
+        (run_id, bucket, c.constraint_id, "ks", ks, c.ks_max, ks <= c.ks_max, 0),
+    ]
+
+
+def _in_phase(spark, props, run_id: str, family: str, step: str, fn):
+    """Run ``fn`` on a pool thread with the caller's local properties
+    ``props`` (job group, scheduler pool — they are per-thread, and a pool
+    thread does not inherit them) under the run's job description."""
+    spark.sparkContext._jsc.sc().setLocalProperties(props)
+    _describe(spark, run_id, family, step)
+    return fn()
+
+
+def _violation_union(
+    base: DataFrame,
+    audio_base: DataFrame,
+    current: DataFrame,
+    baseline_rec: DataFrame,
+    dims: dict[str, DataFrame],
+    suite: Suite,
+    run_id: str,
+    key_col: str,
+    bucket_col: str,
+    salt_buckets: int | None,
+) -> DataFrame:
+    """Every violation-row family of the suite as ONE lazy union in
+    VIOLATION_SCHEMA: row checks over the audio projection, exact
+    duplicates, referential anti-joins, functional dependencies and
+    reconcile diffs."""
+    frames: list[DataFrame] = []
     # ---- row checks: one scan (with audio invariants), all predicates -----
     rc_viol = _row_check_violations(audio_base, suite, run_id, key_col, bucket_col)
     if rc_viol is not None:
-        violation_frames.append(rc_viol)
-    _tick("row checks (lazy)")
+        frames.append(rc_viol)
 
-    # ---- uniqueness: HLL screen (recorded metric) + exact confirm ---------
-    # The HLL estimate is recorded per run (the cheap observability signal,
-    # and at 10^12 rows the early-exit for grossly-duplicated inputs), but
-    # pass/fail truth always comes from the exact pass: HLL's relative error
-    # (~2%) cannot certify uniqueness at realistic dup rates.
-    for i, c in enumerate(suite.unique_checks):
-        verdict_rows.append(
-            (
-                run_id,
-                -1,  # whole-table metric, not per-bucket
-                c.constraint_id,
-                "hll_approx_distinct",
-                float(hll_totals[i]),
-                float(row_count),
-                True,  # informational; exact pass decides
-                0,
+    # ---- uniqueness: the exact confirm --------------------------------------
+    # salt_buckets (opt-in, north_rule skew handling): the uniqueness
+    # groupBy is the suite's one aggregation whose reduce key is the DATA
+    # key — a degenerate hot clip_id pins one reducer there. The fused pass
+    # is immune by construction: it groups on the bucket column with
+    # algebraic aggs, so map-side combine collapses any hot key before the
+    # exchange.
+    for c in suite.unique_checks:
+        frames.append(
+            duplicate_rows(base, c.column, [bucket_col], salt_buckets).select(
+                F.lit(run_id).alias("run_id"),
+                F.col(bucket_col).cast("int").alias("bucket"),
+                F.col(c.column).cast("string").alias("clip_id"),
+                F.lit(c.constraint_id).alias("constraint_id"),
+                F.concat(F.lit("dup_cnt="), F.col("dup_cnt")).alias("observed"),
+                F.lit(f"unique {c.column}").alias("expected"),
             )
         )
-        # salt_buckets (opt-in, north_rule skew handling): the uniqueness
-        # groupBy is the suite's one aggregation whose reduce key is the
-        # DATA key — a degenerate hot clip_id pins one reducer there. The
-        # other families are immune by construction: profile/drift group on
-        # the bucket column with algebraic aggs, so map-side combine
-        # collapses any hot key before the exchange.
-        dup_rows = duplicate_rows(base, c.column, [bucket_col], salt_buckets).select(
-            F.lit(run_id).alias("run_id"),
-            F.col(bucket_col).cast("int").alias("bucket"),
-            F.col(c.column).cast("string").alias("clip_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            F.concat(F.lit("dup_cnt="), F.col("dup_cnt")).alias("observed"),
-            F.lit(f"unique {c.column}").alias("expected"),
-        )
-        violation_frames.append(dup_rows)
-    _tick("uniqueness")
 
     # ---- referential integrity: broadcast anti-joins ----------------------
     for c in suite.ref_checks:
-        dim = dims[c.dim_name]
-        viol = referential_violations(
-            base, c.column, dim, keep_cols=[key_col, bucket_col]
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.col(bucket_col).cast("int").alias("bucket"),
-            F.col(key_col).alias("clip_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            F.col(c.column).cast("string").alias("observed"),
-            F.lit(f"{c.column} in {c.dim_name}").alias("expected"),
+        frames.append(
+            referential_violations(
+                base, c.column, dims[c.dim_name], keep_cols=[key_col, bucket_col]
+            ).select(
+                F.lit(run_id).alias("run_id"),
+                F.col(bucket_col).cast("int").alias("bucket"),
+                F.col(key_col).alias("clip_id"),
+                F.lit(c.constraint_id).alias("constraint_id"),
+                F.col(c.column).cast("string").alias("observed"),
+                F.lit(f"{c.column} in {c.dim_name}").alias("expected"),
+            )
         )
-        violation_frames.append(viol)
 
     # ---- functional dependencies: algebraic two-stage agg ------------------
     # Resume semantics match uniqueness: on a bucket-filtered resume the FD
@@ -654,34 +1153,30 @@ def run_suite(
     for c in suite.fd_checks:
         det = list(c.determinant)
         grp = fd_violations(base, det, c.dependent, carry_min=[key_col, bucket_col])
-        viol = grp.select(
-            F.lit(run_id).alias("run_id"),
-            F.col(bucket_col).cast("int").alias("bucket"),
-            F.col(key_col).cast("string").alias("clip_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            fd_observed(
-                fd_det_repr(det),
-                F.col("n_values"),
-                F.col("n_rows"),
-                F.col("dep_min"),
-                F.col("dep_max"),
-            ).alias("observed"),
-            F.lit(
-                f"{c.dependent} functionally determined by ({', '.join(det)})"
-            ).alias("expected"),
+        frames.append(
+            grp.select(
+                F.lit(run_id).alias("run_id"),
+                F.col(bucket_col).cast("int").alias("bucket"),
+                F.col(key_col).cast("string").alias("clip_id"),
+                F.lit(c.constraint_id).alias("constraint_id"),
+                fd_observed(
+                    fd_det_repr(det),
+                    F.col("n_values"),
+                    F.col("n_rows"),
+                    F.col("dep_min"),
+                    F.col("dep_max"),
+                ).alias("observed"),
+                F.lit(
+                    f"{c.dependent} functionally determined by ({', '.join(det)})"
+                ).alias("expected"),
+            )
         )
-        violation_frames.append(viol)
-    if suite.fd_checks:
-        _tick("functional dependencies (lazy)")
 
     # ---- reconcile vs baseline: removed/changed (and bounded added) rows --
     # Both sides bucket-filtered on resume: bucket = hash(key) is identical
     # across snapshots, so per-bucket resume composes with the diff — a
     # committed bucket's reconcile rows were persisted by the run that
     # committed it.
-    baseline_rec = (
-        baseline.filter(~F.col(bucket_col).isin(skipped)) if skipped else baseline
-    )
     for c in suite.reconcile_checks:
         diff = snapshot_diff(
             baseline_rec,
@@ -690,333 +1185,46 @@ def run_suite(
             list(c.compare_cols),
             carry_cols=[bucket_col],
         )
-        violation_frames.append(
-            reconcile_violation_frame(diff, c, run_id, key_col, bucket_col)
-        )
+        frames.append(reconcile_violation_frame(diff, c, run_id, key_col, bucket_col))
 
-    # ---- materialize violations once, derive per-bucket counts ------------
-    if violation_frames:
-        violations = violation_frames[0]
-        for vf in violation_frames[1:]:
-            violations = violations.unionByName(vf)
-    else:
-        violations = spark.createDataFrame([], VIOLATION_SCHEMA)
-    violations = violations.cache()
-    # Force the cache NOW (the pre-r04 counts collect did this implicitly):
-    # without it the violations scan becomes one more concurrent leg of the
-    # final verdicts job, and running every family's scan in ONE job blew
-    # the 8 GB driver heap at the 8M-row tier (GC overhead limit).
-    violations.count()
-    _tick("violations materialized")
-    counted_ids = (
-        [c.constraint_id for c in suite.row_checks]
-        + [c.constraint_id for c in suite.unique_checks]
-        + [c.constraint_id for c in suite.ref_checks]
-        + [c.constraint_id for c in suite.fd_checks]
-    )
-    if counted_ids:
-        verdict_frames.append(
-            violation_count_verdicts(violations, bucket_df, counted_ids, run_id)
-        )
+    if not frames:
+        return base.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
+    out = frames[0]
+    for vf in frames[1:]:
+        out = out.unionByName(vf)
+    return out
 
-    # ---- reconcile rate verdicts: counts from the CACHED violations frame -
-    # (the diff join never runs twice), baseline sizes from one tiny
-    # algebraic agg; rates per bucket vs the check's bounds. Reconcile ids
-    # are deliberately NOT in counted_ids — pass/fail is the rate bound,
-    # not zero-violations.
-    if suite.reconcile_checks:
-        verdict_frames.extend(
-            reconcile_rate_verdicts(
-                violations, bucket_df, baseline_rec,
-                suite.reconcile_checks, run_id, bucket_col,
-            )
-        )
-        _tick("reconcile verdicts (lazy)")
 
-    # ---- stat checks: single-pass per-bucket column profile ---------------
-    from pyanomalydetector2_spark.constraints.dsl import parse_percentile_stat
-
-    pct_checks = [
-        c for c in suite.stat_checks if parse_percentile_stat(c.stat) is not None
-    ]
-    moment_checks = [
-        c for c in suite.stat_checks if parse_percentile_stat(c.stat) is None
-    ]
-    if moment_checks:
-        stat_cols = sorted({c.column for c in moment_checks})
-        # profile rows are O(buckets × columns); persisted so the per-check
-        # verdict selects below don't recompute the scan — and they stay
-        # DataFrame-side (no driver pmap)
-        prof = column_profile(base, stat_cols, group_cols=[bucket_col]).persist()
-        stat_prof = prof  # unpersisted after the verdict legs materialize
-        _tick("stat profile (lazy)")
-        verdict_frames.extend(
-            stat_verdict_frames(prof, moment_checks, run_id, bucket_col)
+def _mark_committed(
+    checkpoint: CheckpointLedger,
+    run_id: str,
+    verdicts: DataFrame,
+    buckets: list[int],
+    row_count: int,
+) -> None:
+    """Mark ``buckets`` committed with their failed-verdict counts — ONE
+    aggregation over the verdicts frame; the driver holds O(buckets)
+    ledger marks (the ledger is per-bucket by design), never buckets ×
+    constraints."""
+    fails = dict.fromkeys(buckets, 0)
+    for r in (
+        verdicts.filter(~F.col("passed")).groupBy("bucket").count().collect()
+    ):
+        if int(r["bucket"]) in fails:
+            fails[int(r["bucket"])] = int(r["count"])
+    for b in buckets:
+        checkpoint.mark_committed(
+            run_id,
+            int(b),
+            metrics={"rows": row_count, "failed_constraints": fails[b]},
         )
-    if pct_checks:
-        # percentile stats ride the mergeable KLL sketch — the SAME sketch
-        # the streaming suite merges per micro-batch, so exact-regime
-        # verdicts agree bit-for-bit between the two engines
-        sk = percentile_sketches(
-            base, sorted({c.column for c in pct_checks}), bucket_col
-        )
-        pframe = percentile_stat_frame(sk, pct_checks, bucket_df)
-        verdict_frames.extend(
-            stat_verdict_frames(pframe, pct_checks, run_id, "bucket")
-        )
-        _tick("percentile stat verdicts (lazy)")
-
-    # ---- drift checks: ONE histogram pass per side for ALL uniform-bin ----
-    # columns; equi-depth checks run per column (edges from the baseline's
-    # quantile sketch)
-    cat = [c for c in suite.drift_checks if c.categorical]
-    numeric = [c for c in suite.drift_checks if not c.categorical]
-    uniform = [c for c in numeric if not c.equi_depth and not c.distributed]
-    equi = [c for c in numeric if c.equi_depth and not c.distributed]
-    dist = [c for c in numeric if c.distributed]
-    scored: list[tuple] = []  # (check, score dict)
-    if uniform:
-        specs = [HistSpec(c.column, c.lo, c.hi, c.nbins) for c in uniform]
-        by_col = {c.column: c for c in uniform}
-        for s in drift_scores_multi(base, baseline, specs, group_col=bucket_col):
-            scored.append((by_col[s["column"]], s))
-        # a check that produced NO score means the baseline histogram for
-        # that column was empty/all-null — the same condition the
-        # equi-depth and distributed paths raise on; silence here would
-        # let a misconfigured baseline pass the whole suite
-        seen_ids = {c.constraint_id for c, _ in scored}
-        for c in uniform:
-            if c.constraint_id not in seen_ids:
-                raise ValueError(
-                    f"drift check {c.constraint_id!r} produced no score — "
-                    f"column {c.column!r} is empty/all-null in the baseline "
-                    "or in every current bucket (fix the snapshot or drop "
-                    "the check)"
-                )
-    def _equi_edges_map() -> dict[tuple[str, int], list[float] | None]:
-        """Equi-depth edges from the persisted KLL store when one is wired
-        (``sketch_store``): hit → KBs of sketch state replace the baseline
-        percentile_approx rescan; miss → bootstrap so every later run is a
-        hit. ALL missing columns bootstrap in ONE kll_build_multi pass —
-        the Arrow transfer dominates a sketch build (BENCH §24), so E
-        equi-depth columns must not pay E baseline scans. No store → all
-        None (inline edge derivation, unchanged)."""
-        wanted = [
-            (c.column, c.nbins)
-            for c in equi + [c for c in dist if c.equi_depth]
-        ]
-        edges_map: dict[tuple[str, int], list[float] | None] = {
-            w: None for w in wanted
-        }
-        if sketch_store is None or not wanted:
-            return edges_map
-        from pyanomalydetector2_spark.operators.drift import (
-            quantile_edges_from_sketch,
-        )
-        from pyanomalydetector2_spark.operators.kll import (
-            SKETCH_FIELDS,
-            kll_build_multi,
-        )
-
-        spark = baseline.sparkSession
-
-        def _resolve() -> None:
-            state = sketch_store.read(spark)
-            for col, nbins in wanted:
-                if edges_map[(col, nbins)]:
-                    continue
-                e = quantile_edges_from_sketch(
-                    state.filter(F.col("column") == col).select(*SKETCH_FIELDS),
-                    nbins,
-                )
-                if e:
-                    edges_map[(col, nbins)] = e
-
-        if sketch_store.current_snapshot() is not None:
-            _resolve()
-        missing = sorted({col for (col, _), e in edges_map.items() if not e})
-        if missing:
-            sk = kll_build_multi(baseline, missing, (), k=4096)
-            sketch_store.merge_upsert(sk, keys=["column"])
-            _resolve()
-        return edges_map
-
-    equi_edges_map = (
-        _equi_edges_map()
-        if (equi or any(c.equi_depth for c in dist))
-        else {}
-    )
-    for c in equi:
-        for s in drift_scores_quantile(
-            base, baseline, c.column, c.nbins, group_col=bucket_col,
-            edges=equi_edges_map[(c.column, c.nbins)],
-        ):
-            scored.append((c, s))
-    def _drift_verdicts(frame: DataFrame, c, ks_col: str) -> None:
-        verdict_frames.extend(
-            drift_verdict_frames(frame, c, run_id, bucket_col, ks_col)
-        )
-
-    for c in dist:
-        # no-histogram-collect path (high-cardinality bucket columns):
-        # scores AND verdicts stay DataFrame-side
-        from pyanomalydetector2_spark.operators.drift import (
-            drift_scores_df,
-            drift_scores_quantile_df,
-        )
-
-        frame = (
-            drift_scores_quantile_df(
-                base, baseline, c.column, c.nbins, group_col=bucket_col,
-                edges=equi_edges_map[(c.column, c.nbins)],
-            )
-            if c.equi_depth
-            else drift_scores_df(
-                base, baseline, c.column, c.lo, c.hi, c.nbins, group_col=bucket_col
-            )
-        )
-        _drift_verdicts(frame, c, "ks")
-    for c in cat:
-        # categorical: frequency-PSI + linf (reported in the ks verdict
-        # slot — the order-free analog, bounded by ks_max). Always the
-        # no-collect path.
-        from pyanomalydetector2_spark.operators.drift import (
-            drift_scores_categorical_df,
-        )
-
-        frame = drift_scores_categorical_df(
-            base, baseline, c.column, group_col=bucket_col
-        )
-        _drift_verdicts(frame, c, "linf")
-    if suite.drift_checks:
-        _tick("drift (all columns)")
-    for c, s in scored:
-        b = int(s["group"])
-        psi, ks = s["psi"], s["ks"]
-        verdict_rows.append(
-            (run_id, b, c.constraint_id, "psi", psi, c.psi_max, psi <= c.psi_max, 0)
-        )
-        verdict_rows.append(
-            (run_id, b, c.constraint_id, "ks", ks, c.ks_max, ks <= c.ks_max, 0)
-        )
-
-    # ---- ANN recall audit (opt-in: needs an embeddings table) -------------
-    # Corpus-level metric → bucket -1 (not a per-bucket verdict; excluded
-    # from checkpoint commit marks, included in passed()).
-    if suite.ann_checks:
-        if embeddings is None:
-            raise ValueError(
-                "suite has ann_checks but run_suite received no embeddings "
-                "table — pass embeddings=... (skipping an enabled check "
-                "would vacuously pass the suite)"
-            )
-        from pyanomalydetector2_spark.operators.similarity import (
-            brute_force_topk,
-            ivf_topk,
-            lsh_bucketed_topk,
-            recall_audit,
-            sample_queries,
-        )
-
-        for c in suite.ann_checks:
-            q = sample_queries(embeddings, c.n_queries)
-            exact = brute_force_topk(embeddings, q, k=c.k)
-            if c.method == "lsh":
-                ann = lsh_bucketed_topk(
-                    embeddings, q, dims=c.dims, k=c.k, planes=c.planes
-                )
-            elif c.method == "ivf":
-                ann = ivf_topk(
-                    embeddings, q, k=c.k, n_cells=c.n_cells, nprobe=c.nprobe
-                )
-            else:
-                raise ValueError(f"unknown ann method {c.method!r}")
-            row = recall_audit(ann, exact).agg(
-                F.avg("recall").alias("r")
-            ).first()
-            mean_r = float(row["r"]) if row and row["r"] is not None else 0.0
-            verdict_rows.append(
-                (
-                    run_id,
-                    -1,
-                    c.constraint_id,
-                    f"recall_at_{c.k}",
-                    mean_r,
-                    c.min_recall,
-                    mean_r >= c.min_recall,
-                    0,
-                )
-            )
-        _tick("ann recall audit")
-
-    # Family verdict frames: eager (default) materializes each frame
-    # sequentially via localCheckpoint — rows stay distributed, driver
-    # memory independent of bucket count, families execute one job at a
-    # time (the small-driver-safe shape). Lazy leaves one union job whose
-    # family scans overlap — the cluster shape. See the docstring knob.
-    verdicts = local_rows_df(spark, verdict_rows, VERDICT_SCHEMA)
-    for vf in verdict_frames:
-        verdicts = verdicts.unionByName(
-            vf.localCheckpoint() if eager_verdicts else vf
-        )
-    verdicts = verdicts.cache()
-    if stat_prof is not None and eager_verdicts:
-        # its verdict legs are materialized above; under lazy verdicts the
-        # legs still reference the persisted profile — keep the cache
-        stat_prof.unpersist()
-
-    if checkpoint is not None and commit:
-        # per-bucket fail counts via ONE aggregation over the verdicts
-        # frame — the driver holds O(buckets) ledger marks (the ledger is
-        # per-bucket by design), never buckets × constraints
-        per_bucket_fail = dict.fromkeys((int(b) for b in buckets), 0)
-        for r in (
-            verdicts.filter(~F.col("passed"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        ):
-            if int(r["bucket"]) in per_bucket_fail:
-                per_bucket_fail[int(r["bucket"])] = int(r["cnt"])
-        for b in buckets:
-            checkpoint.mark_committed(
-                run_id,
-                int(b),
-                metrics={
-                    "rows": row_count,
-                    "failed_constraints": per_bucket_fail[int(b)],
-                },
-            )
-
-    return SuiteResult(
-        run_id,
-        verdicts,
-        violations,
-        sorted(int(b) for b in buckets),
-        skipped,
-        row_count,
-        time.time() - t0,
-        cached=(
-            (verdicts,)
-            if stat_prof is None or eager_verdicts
-            else (verdicts, stat_prof)
-        ),
-    )
 
 
 def commit_checkpoint(res: SuiteResult, checkpoint: CheckpointLedger) -> None:
     """Mark the result's processed buckets committed in the ledger — call
     this AFTER the verdicts/violations have been durably persisted (the
     write-ahead ordering --resume correctness depends on)."""
-    fails = dict.fromkeys(res.processed_buckets, 0)
-    for r in (
-        res.verdicts.filter(~F.col("passed")).groupBy("bucket").count().collect()
-    ):
-        if int(r["bucket"]) in fails:
-            fails[int(r["bucket"])] = int(r["count"])
-    for b in res.processed_buckets:
-        checkpoint.mark_committed(
-            res.run_id,
-            int(b),
-            metrics={"rows": res.row_count, "failed_constraints": fails[b]},
-        )
+    _mark_committed(
+        checkpoint, res.run_id, res.verdicts, res.processed_buckets,
+        res.row_count,
+    )

@@ -63,6 +63,22 @@ def binned_counts(
     )
 
 
+def hist_bin(s: HistSpec):
+    """The uniform-bin expression of one spec: width_bucket semantics (bin
+    0 = underflow, nbins+1 = overflow), NULL for a NULL or NaN value. ONE
+    definition for every path that counts uniform bins, so the one-shot
+    suite and the streaming state bin identically."""
+    return F.when(
+        F.col(s.column).isNotNull(),
+        F.width_bucket(
+            F.col(s.column).cast("double"),
+            F.lit(s.lo),
+            F.lit(s.hi),
+            F.lit(s.nbins),
+        ),
+    )
+
+
 def histogram_counts_df(
     df: DataFrame, specs: list[HistSpec], group_col: str | None = None
 ) -> DataFrame:
@@ -72,18 +88,7 @@ def histogram_counts_df(
     suite persists this frame per micro-batch and sums across batches,
     which reproduces the one-shot histogram bit-for-bit."""
     entries = [
-        F.struct(
-            F.lit(s.column).alias("c"),
-            F.when(
-                F.col(s.column).isNotNull(),
-                F.width_bucket(
-                    F.col(s.column).cast("double"),
-                    F.lit(s.lo),
-                    F.lit(s.hi),
-                    F.lit(s.nbins),
-                ),
-            ).alias("b"),
-        )
+        F.struct(F.lit(s.column).alias("c"), hist_bin(s).alias("b"))
         for s in specs
     ]
     gsel = [F.col(group_col).alias("g")] if group_col else [F.lit(None).cast("int").alias("g")]

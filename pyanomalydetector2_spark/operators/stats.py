@@ -97,35 +97,52 @@ def subtract_moments(cur: DataFrame, old: DataFrame, keys: Sequence[str]) -> Dat
     return merge_moments(cur, neg, keys).filter(F.col("cnt") > 0)
 
 
-def column_profile_partial(
-    df: DataFrame, columns: Sequence[str], group_cols: Sequence[str] = ()
-) -> DataFrame:
-    """The exactly-mergeable subset of ``column_profile``: per (group,
-    column) — row_cnt, cnt, null_cnt, min, max, sum, sqr_sum — in the same
-    long layout and with the same try_cast semantics. The streaming suite
-    persists this frame per micro-batch; ``merge_profile_partials`` +
-    ``finalize_profile_partial`` then reproduce the one-shot profile's
-    null_rate/mean/std/min/max/cnt algebra over the merged scalars.
-    (approx_distinct and quantiles are sketch-backed and NOT derivable
-    from these scalars — a streaming StatCheck on those stats must be
-    rejected, not silently wrong.)"""
+# the exactly-mergeable profile fields (counts and sums add, min/max
+# combine) and the sketch-backed ones that no per-batch scalar can rebuild
+PARTIAL_FIELDS = ("row_cnt", "cnt", "null_cnt", "min", "max", "sum", "sqr_sum")
+PROFILE_SKETCH_FIELDS = ("approx_distinct", "quantiles")
+
+
+def profile_aggs(
+    columns: Sequence[str],
+    fields: Sequence[str] = PARTIAL_FIELDS,
+    quantiles: Sequence[float] = (0.25, 0.5, 0.75),
+) -> list[Column]:
+    """The wide aggregate expressions behind every column profile: one
+    ``{column}__{field}`` aggregate per (column, field), so ALL columns ride
+    ONE scan + one shuffle. Numeric stats read ``try_cast(double)`` (string
+    columns → null numeric stats, ANSI-safe); ``cnt`` counts the values that
+    enter the moment sums (try_cast survivors) so mean = sum/cnt uses a
+    matched denominator even on partially-castable string columns, while
+    the raw non-null count stays row_cnt − null_cnt."""
     total = F.count(F.lit(1))
-    fields = ("row_cnt", "cnt", "null_cnt", "min", "max", "sum", "sqr_sum")
-    aggs = []
+    out = []
     for c in columns:
         v = F.col(c)
         num = v.try_cast("double")
-        aggs += [
-            total.alias(f"{c}__row_cnt"),
-            F.count(num).alias(f"{c}__cnt"),
-            (total - F.count(v)).alias(f"{c}__null_cnt"),
-            F.min(num).alias(f"{c}__min"),
-            F.max(num).alias(f"{c}__max"),
-            F.sum(num).alias(f"{c}__sum"),
-            F.sum(num * num).alias(f"{c}__sqr_sum"),
-        ]
-    g = df.groupBy(*group_cols) if group_cols else df.groupBy()
-    wide = g.agg(*aggs)
+        agg = {
+            "row_cnt": lambda: total,
+            "cnt": lambda: F.count(num),
+            "null_cnt": lambda: total - F.count(v),
+            "min": lambda: F.min(num),
+            "max": lambda: F.max(num),
+            "sum": lambda: F.sum(num),
+            "sqr_sum": lambda: F.sum(num * num),
+            "approx_distinct": lambda: F.approx_count_distinct(v),
+            "quantiles": lambda: F.percentile_approx(num, list(quantiles), 10000),
+        }
+        out += [agg[f]().alias(f"{c}__{f}") for f in fields]
+    return out
+
+
+def stack_profile(
+    wide: DataFrame,
+    columns: Sequence[str],
+    fields: Sequence[str],
+    group_cols: Sequence[str] = (),
+) -> DataFrame:
+    """Unpivot a ``profile_aggs`` row to the long (group, column, field…)
+    layout with ``stack`` — one row per (group, column)."""
     stack_args = ", ".join(
         "'{c}', {flds}".format(
             c=c, flds=", ".join(f"`{c}__{f}`" for f in fields)
@@ -138,6 +155,24 @@ def column_profile_partial(
             f"stack({len(columns)}, {stack_args}) AS "
             f"(column, {', '.join(fields)})"
         ),
+    )
+
+
+def column_profile_partial(
+    df: DataFrame, columns: Sequence[str], group_cols: Sequence[str] = ()
+) -> DataFrame:
+    """The exactly-mergeable subset of ``column_profile``: per (group,
+    column) — row_cnt, cnt, null_cnt, min, max, sum, sqr_sum — in the same
+    long layout and with the same try_cast semantics. The streaming suite
+    persists this frame per micro-batch; ``merge_profile_partials`` +
+    ``finalize_profile_partial`` then reproduce the one-shot profile's
+    null_rate/mean/std/min/max/cnt algebra over the merged scalars.
+    (approx_distinct and quantiles are sketch-backed and NOT derivable
+    from these scalars — a streaming StatCheck on those stats must be
+    rejected, not silently wrong.)"""
+    g = df.groupBy(*group_cols) if group_cols else df.groupBy()
+    return stack_profile(
+        g.agg(*profile_aggs(columns)), columns, PARTIAL_FIELDS, group_cols
     )
 
 
@@ -184,54 +219,13 @@ def column_profile(
     aggregation row, unpivoted to long with ``stack`` afterwards) — at
     10^12 rows this is the difference between 1 and |columns| table passes.
     """
-    total = F.count(F.lit(1))
-    fields = (
-        "row_cnt",
-        "cnt",
-        "null_cnt",
-        "min",
-        "max",
-        "sum",
-        "sqr_sum",
-        "approx_distinct",
-        "quantiles",
-    )
-    aggs = []
-    for c in columns:
-        v = F.col(c)
-        num = v.try_cast("double")  # string columns → null numeric stats (ANSI-safe)
-        aggs += [
-            total.alias(f"{c}__row_cnt"),
-            # cnt counts values that enter the moment sums (try_cast
-            # survivors) so mean = sum/cnt uses a matched denominator even
-            # on partially-castable string columns; raw non-null count =
-            # row_cnt − null_cnt as before
-            F.count(num).alias(f"{c}__cnt"),
-            (total - F.count(v)).alias(f"{c}__null_cnt"),
-            F.min(num).alias(f"{c}__min"),
-            F.max(num).alias(f"{c}__max"),
-            F.sum(num).alias(f"{c}__sum"),
-            F.sum(num * num).alias(f"{c}__sqr_sum"),
-            F.approx_count_distinct(v).alias(f"{c}__approx_distinct"),
-            F.percentile_approx(num, list(quantiles), 10000).alias(f"{c}__quantiles"),
-        ]
+    fields = PARTIAL_FIELDS + PROFILE_SKETCH_FIELDS
     g = df.groupBy(*group_cols) if group_cols else df.groupBy()
-    wide = g.agg(*aggs)
-    stack_args = ", ".join(
-        "'{c}', {flds}".format(
-            c=c, flds=", ".join(f"`{c}__{f}`" for f in fields)
+    out = finalize_profile_partial(
+        stack_profile(
+            g.agg(*profile_aggs(columns, fields, quantiles)),
+            columns, fields, group_cols,
         )
-        for c in columns
-    )
-    out = wide.select(
-        *group_cols,
-        F.expr(
-            f"stack({len(columns)}, {stack_args}) AS "
-            f"(column, {', '.join(fields)})"
-        ),
-    )
-    out = finalize_moments(out).withColumn(
-        "null_rate", F.try_divide(F.col("null_cnt"), F.col("row_cnt"))
     )
     front = list(group_cols) + ["column"]
     return out.select(*front, *[c for c in out.columns if c not in front])

@@ -1,7 +1,7 @@
 """Streaming constraint validation: the batch suite's semantics over a
 Structured Streaming drain, with per-micro-batch incremental state.
 
-The batch runner (constraints/suite.py) makes one pass per check family
+The batch runner (constraints/suite.py) makes one shared aggregation pass
 over the full table. At 10^12 rows with continuous arrival, re-validating
 the corpus per delivery is not an option — but every family the default
 clips suite uses is **algebraically mergeable**, so the stream keeps
@@ -96,9 +96,11 @@ from pyanomalydetector2_spark.constraints.suite import (
     drift_verdict_frames,
     reconcile_rate_verdicts,
     reconcile_violation_frame,
+    require_bucketed,
     row_check_base,
     stat_verdict_frames,
     violation_count_verdicts,
+    violation_counts,
 )
 from pyanomalydetector2_spark.operators.drift import (
     HistSpec,
@@ -721,6 +723,11 @@ def process_suite_batch(
         brows = fut_counts.result()
         for f in futs:
             f.result()
+    # before the buckets delta and the commit marker: a batch that fails
+    # here stays uncommitted, so its component deltas are never read
+    require_bucketed(
+        sum(r["n"] for r in brows if r[bucket_col] is None), bucket_col
+    )
     rows = sum(r["n"] for r in brows)
     # Arrow-backed local frame: the classic list createDataFrame pickles
     # the rows, so this 8-row write paid a ~4 s Python-worker launch per
@@ -1036,6 +1043,7 @@ def streaming_suite_result(
             [],
             row_count,
             time.time() - t0,
+            cached=(violations,),
         )
 
     verdict_frames: list[DataFrame] = list(hll_frames)
@@ -1047,7 +1055,9 @@ def streaming_suite_result(
     )
     if counted_ids:
         verdict_frames.append(
-            violation_count_verdicts(violations, bucket_df, counted_ids, run_id)
+            violation_count_verdicts(
+                violation_counts(violations), bucket_df, counted_ids, run_id
+            )
         )
 
     # ---- reconcile rate verdicts: the SHARED helper over the cached ------
@@ -1241,6 +1251,7 @@ def streaming_suite_result(
         [],
         row_count,
         time.time() - t0,
+        cached=(violations, verdicts),
     )
 
 

@@ -29,6 +29,8 @@ from pyanomalydetector2_spark.streaming.checkpoint import CheckpointLedger
 
 N = 3000
 BUCKETS = 8
+# Spark jobs one default-suite run_suite call submits on the clips fixture
+JOB_BOUND = 27
 
 
 def oracle_pdf(n: int, planted: bool) -> pd.DataFrame:
@@ -540,3 +542,145 @@ def test_speaking_rate_null_duration_is_missing_evidence(spark):
         "outlier": False,   # 500 tokens/s: genuine violation
         "sane": True,
     }
+
+
+def _jobs_after(spark, after_job_id: int) -> list:
+    """(job id, description) of every job with id > ``after_job_id``, read
+    from the application status store once the listener bus is drained."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    out = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobId() <= after_job_id:
+            break
+        desc = job.description()
+        out.append((job.jobId(), desc.get() if desc.isDefined() else None))
+    return out
+
+
+@pytest.fixture(scope="module")
+def suite_jobs(spark, clips):
+    """One default-suite run under a caller job description, with the jobs
+    it submitted (counted by job-id range) and the description after."""
+    cur, base, dims = clips
+    cur.count(), base.count()  # the fixture's own caches are filled first
+    sc = spark.sparkContext
+    before = _jobs_after(spark, -1)
+    last = before[0][0] if before else -1
+    sc.setJobDescription("caller job")
+    try:
+        res = run_suite(cur, base, dims, default_clips_suite(), "run_jobs")
+        after_desc = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setJobDescription(None)
+    jobs = _jobs_after(spark, last)
+    res.unpersist()
+    return jobs, after_desc
+
+
+SUITE_FAMILIES = {
+    "fused", "violations", "uniqueness", "drift", "ann", "verdicts",
+    "checkpoint",
+}
+
+
+def test_every_suite_job_is_tagged_with_its_family(suite_jobs):
+    """Every Spark job a run submits names the run and its check family
+    (AQE stage jobs and the background violations job included), and the
+    caller's own job description comes back afterwards."""
+    jobs, after_desc = suite_jobs
+    assert jobs
+    for job_id, desc in jobs:
+        assert desc and desc.startswith("suite run_jobs: "), (job_id, desc)
+        family, _, step = desc[len("suite run_jobs: "):].partition("/")
+        assert family in SUITE_FAMILIES and step, (job_id, desc)
+    assert after_desc == "caller job"
+
+
+def test_default_suite_job_count_guard(suite_jobs):
+    """The fused shape: one aggregation pass per snapshot, one violations
+    job, one verdict job. The job chain per check family it replaced
+    submitted 42 jobs on this fixture."""
+    jobs, _ = suite_jobs
+    assert len(jobs) <= JOB_BOUND, [d for _, d in jobs]
+
+
+def test_null_bucket_fails_closed(spark):
+    """One NULL-bucket row: a ValueError naming the bucket column and the
+    NULL row count — not a TypeError from the driver — and the caller's
+    job description survives the error."""
+    from pyspark.sql import functions as F
+
+    df = clips_table(spark, 200, planted=True, n_buckets=4).withColumn(
+        "bucket",
+        F.when(F.col("clip_id") == "clip-000000000007", F.lit(None)).otherwise(
+            F.col("bucket")
+        ),
+    )
+    dims = {"dim_codec": dim_codec(spark), "dim_sr": dim_sr(spark)}
+    sc = spark.sparkContext
+    sc.setJobDescription("caller job")
+    try:
+        with pytest.raises(ValueError, match=r"1 row\(s\) have a NULL 'bucket'"):
+            run_suite(df, df, dims, default_clips_suite(), "run_null_bucket")
+        assert sc.getLocalProperty("spark.job.description") == "caller job"
+    finally:
+        sc.setJobDescription(None)
+
+
+def test_unpersist_releases_every_cached_frame(spark, clips):
+    from pyspark import StorageLevel
+
+    cur, base, dims = clips
+    for eager in (True, False):
+        res = run_suite(
+            cur, base, dims, default_clips_suite(), "run_unpersist",
+            eager_verdicts=eager,
+        )
+        res.verdicts.count()
+        res.unpersist()
+        assert res.violations.storageLevel == StorageLevel.NONE
+        assert res.verdicts.storageLevel == StorageLevel.NONE
+        assert all(df.storageLevel == StorageLevel.NONE for df in res.cached)
+
+
+def test_stat_checks_equal_column_profile(spark, clips):
+    """StatChecks read the fused pass's moment partials — and sketch-backed
+    stats outside the mergeable set (approx_distinct) still ride it: every
+    per-bucket observed value equals the one-shot column_profile's."""
+    from pyanomalydetector2_spark.constraints.dsl import StatCheck, Suite
+    from pyanomalydetector2_spark.operators.stats import column_profile
+
+    cur, base, dims = clips
+    checks = [
+        ("dur_ms", "std"),
+        ("sr_hz", "max"),
+        ("transcript", "null_rate"),
+        ("codec", "approx_distinct"),
+        ("dur_ms", "approx_distinct"),
+    ]
+    suite = Suite(
+        stat_checks=tuple(
+            StatCheck(f"{col}_{stat}", col, stat, ">=", 0.0)
+            for col, stat in checks
+        )
+    )
+    res = run_suite(cur, base, dims, suite, "run_stats")
+    got = {
+        (r["constraint_id"], r["bucket"]): r["observed"]
+        for r in res.verdicts.collect()
+    }
+    prof = column_profile(
+        cur, sorted({c for c, _ in checks}), group_cols=["bucket"]
+    ).collect()
+    want = {
+        (f"{r['column']}_{stat}", r["bucket"]): float(r[stat])
+        for r in prof
+        for col, stat in checks
+        if r["column"] == col
+    }
+    assert got.keys() == want.keys() and len(want) == len(checks) * BUCKETS
+    for key, value in want.items():
+        assert got[key] == pytest.approx(value, rel=1e-12), key

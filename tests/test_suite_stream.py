@@ -525,3 +525,33 @@ def test_all_null_percentile_column_drains_to_failed_verdict(
     res = streaming_suite_result(spark, state, suite, None, "nul")
     rows = res.verdicts.filter("constraint_id = 'p'").collect()
     assert rows and all(not r["passed"] for r in rows)
+
+
+def test_stream_result_unpersist_releases_caches(spark, drained):
+    from pyspark import StorageLevel
+
+    _, state, base, _, suite, _, _ = drained
+    res = streaming_suite_result(spark, state, suite, base, "stream_run")
+    res.verdicts.count()
+    res.unpersist()
+    assert res.violations.storageLevel == StorageLevel.NONE
+    assert res.verdicts.storageLevel == StorageLevel.NONE
+
+
+def test_null_bucket_batch_fails_closed(spark, tmp_path):
+    """A micro-batch with a NULL-bucket row raises a ValueError naming the
+    bucket column and the NULL row count, and commits nothing: its deltas
+    stay invisible to every reader."""
+    state = str(tmp_path / "state")
+    batch = clips_table(spark, 200, planted=True, n_buckets=4).withColumn(
+        "bucket",
+        F.when(F.col("clip_id") == "clip-000000000007", F.lit(None)).otherwise(
+            F.col("bucket")
+        ),
+    )
+    dims = {"dim_codec": dim_codec(spark), "dim_sr": dim_sr(spark)}
+    with pytest.raises(ValueError, match=r"1 row\(s\) have a NULL 'bucket'"):
+        process_suite_batch(
+            batch, 0, state, default_clips_suite(), dims, "null_bucket"
+        )
+    assert batch_metrics(state) == []
