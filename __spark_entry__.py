@@ -53,15 +53,10 @@ def _ntz(ts_str: str):
 # non-trivial survivor set (semantics identical to the reference's λ1 screen)
 _LAMBDA1 = 0.5
 _IGNORE_DIFF_RATE = 0.05
-# process-local IVF index cache: corpus identity → mkdtemp dir (see
-# q_ann_ivf_index_topk)
-_IVF_INDEX_CACHE: dict[str, str] = {}
-_AUDIO_FP_INDEX_CACHE: dict[str, str] = {}
-_AUDIO_CORPUS_CACHE: dict[str, str] = {}
-_PADDED_CORPUS_CACHE: dict[str, str] = {}
-_SNIPPET_SRC_CACHE: dict[str, tuple[str, int]] = {}
-_INCR_INDEX_CACHE: dict[str, str] = {}
-_SS_SRC_CACHE: dict[str, str] = {}
+# per-process materialized inputs (indexes, synthesized corpora, arrival
+# dirs): (kind, <sf>/<table>.parquet, st_mtime_ns, st_size, *extra) →
+# whatever the builder returned (see _cached_input)
+_INPUT_CACHE: dict[tuple, object] = {}
 
 
 def _cache_tmpdir(prefix: str) -> str:
@@ -76,7 +71,32 @@ def _cache_tmpdir(prefix: str) -> str:
     d = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
-_INGEST_SRC_CACHE: dict[str, str] = {}
+
+
+def _input_key(kind: str, sf: str, table: str, *extra) -> tuple:
+    """Identity of a derived input: the source table's path + mtime + size
+    (a regenerated parquet can never be served a stale derivation) plus
+    ``extra`` (e.g. the fingerprint oracle version)."""
+    import os
+
+    p = os.path.join(sf, f"{table}.parquet")
+    st = os.stat(p)
+    return (kind, p, st.st_mtime_ns, st.st_size, *extra)
+
+
+def _cached_input(kind: str, sf: str, table: str, build, *extra):
+    """Build a derived input ONCE PER PROCESS per source table: on a miss,
+    ``build(dir)`` writes into a fresh ``_cache_tmpdir`` directory (an
+    unpredictable 0700 dir per process — no shared-path races, removed at
+    exit) and its return value is cached under ``_input_key``. Repeated
+    bench/contract invocations then measure the query over a stored
+    table — the engine's real input shape — not the datagen/index build."""
+    key = _input_key(kind, sf, table, *extra)
+    if key not in _INPUT_CACHE:
+        _INPUT_CACHE[key] = build(_cache_tmpdir(f"pyad2_{kind}_"))
+    return _INPUT_CACHE[key]
+
+
 _TRENDS_MIN_COUNT = 3
 # TPC-H cuts — Spark compares the TIMESTAMP_NTZ column to an NTZ literal
 # (tz-proof AND pushed to the scan); the oracle uses the same naive literal
@@ -335,9 +355,6 @@ def q_near_dup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     stored corpus signature index instead of re-running the corpus self-join
     (dedup.near_dup_jaccard_incremental — pair generation proportional to
     the batch, not the corpus)."""
-    import os
-    import tempfile
-
     from pyanomalydetector2_spark.operators.dedup import (
         minhash_signatures,
         near_dup_jaccard_incremental,
@@ -351,17 +368,14 @@ def q_near_dup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # that index once per process per id source — the _audio_corpus
     # stored-table convention — instead of re-shingling the corpus per
     # invocation through the testing-convenience index_sigs=None path.
-    doc_path = os.path.join(sf, "documents.parquet")
-    st = os.stat(doc_path)
-    key = f"{doc_path}:{st.st_mtime_ns}:{st.st_size}"
-    base = _INCR_INDEX_CACHE.get(key)
-    if base is None:
-        base = _cache_tmpdir("pyad2_incr_index_")
+    def build(base: str) -> str:
         old = docs.filter(F.col("doc_id") >= _INCR_CUT)
         minhash_signatures(old, "doc_id", "text", 8, 3).write.mode(
             "overwrite"
         ).parquet(f"{base}/sigs")
-        _INCR_INDEX_CACHE[key] = base
+        return base
+
+    base = _cached_input("incr_index", sf, "documents", build)
     index_sigs = spark.read.parquet(f"{base}/sigs")
     j = near_dup_jaccard_incremental(docs, new, "doc_id", "text",
                                      index_sigs=index_sigs,
@@ -823,14 +837,9 @@ def q_ann_ivf_index_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     The index is built ONCE PER PROCESS per corpus (keyed on the corpus
     file's path+mtime+size, so a regenerated embeddings.parquet can never
-    be served a stale index) in a fresh mkdtemp directory — repeated
-    bench/contract invocations in one session measure the PROBE path, the
-    one a production batch pays, while concurrent processes each build
-    their own unpredictable 0700 directory (no shared-path races, no
-    poisonable fixed /tmp location)."""
-    import os
-    import tempfile
-
+    be served a stale index; see _cached_input) — repeated bench/contract
+    invocations in one session measure the PROBE path, the one a
+    production batch pays."""
     from pyanomalydetector2_spark.operators.similarity import (
         ivf_assignments,
         ivf_centroids,
@@ -841,18 +850,16 @@ def q_ann_ivf_index_topk(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
-    emb_path = os.path.join(sf, "embeddings.parquet")
-    st = os.stat(emb_path)
-    key = f"{emb_path}:{st.st_mtime_ns}:{st.st_size}"
-    base = _IVF_INDEX_CACHE.get(key)
-    if base is None:
-        base = tempfile.mkdtemp(prefix="pyad2_ivf_index_")
-        t_c = SnapshotTable(f"{base}/centroids")
-        t_a = SnapshotTable(f"{base}/assignments")
+
+    def build(base: str) -> str:
         cents = ivf_centroids(emb, n_cells=16)
-        t_c.write_snapshot(cents)
-        t_a.write_snapshot(ivf_assignments(emb, cents), partition_by=["cell"])
-        _IVF_INDEX_CACHE[key] = base
+        SnapshotTable(f"{base}/centroids").write_snapshot(cents)
+        SnapshotTable(f"{base}/assignments").write_snapshot(
+            ivf_assignments(emb, cents), partition_by=["cell"]
+        )
+        return base
+
+    base = _cached_input("ivf_index", sf, "embeddings", build)
     t_c = SnapshotTable(f"{base}/centroids")
     t_a = SnapshotTable(f"{base}/assignments")
     q = emb.filter(F.col("vec_id") < 20)
@@ -1194,21 +1201,13 @@ def _audio_corpus(
         synth_corpus,
     )
 
-    import os
-    import tempfile
-
     # The synthesized corpus is MATERIALIZED once per process per id
-    # source (clips-shaped parquet in a fresh mkdtemp, same
-    # corpus-identity key convention as the index caches): every audio
+    # source (clips-shaped parquet, _cached_input): every audio
     # query then reads a stored table — the engine's real input shape —
     # so benchmarks charge decode/fingerprint work, not datagen, and an
     # id predicate prunes at the parquet scan instead of dying above
     # mapInPandas.
-    doc_path = os.path.join(sf, "documents.parquet")
-    st = os.stat(doc_path)
-    key = f"{doc_path}:{st.st_mtime_ns}:{st.st_size}:{ORACLE_FP_DIR}"
-    base = _AUDIO_CORPUS_CACHE.get(key)
-    if base is None:
+    def build(base: str) -> str:
         # cap at the oracle table's precomputed seed range: a future sf
         # with more documents must not silently diverge from the oracle
         docs = (
@@ -1216,11 +1215,12 @@ def _audio_corpus(
             .select("doc_id")
             .filter(F.col("doc_id") < ORACLE_FP_SEEDS)
         )
-        base = tempfile.mkdtemp(prefix="pyad2_audio_corpus_")
         synth_corpus(spark, docs).write.mode("overwrite").parquet(
             f"{base}/clips"
         )
-        _AUDIO_CORPUS_CACHE[key] = base
+        return base
+
+    base = _cached_input("audio_corpus", sf, "documents", build, ORACLE_FP_DIR)
     clips = spark.read.parquet(f"{base}/clips")
     if max_id is not None:
         clips = clips.filter(F.col("clip_id") < max_id)
@@ -1286,14 +1286,11 @@ def q_audio_near_dup_incremental(spark: SparkSession, sf: str) -> DataFrame:
 
     The index is built ONCE PER PROCESS per corpus (same convention as
     q_ann_ivf_index_topk: keyed on the id-source parquet's
-    path+mtime+size plus the fingerprint oracle version, fresh mkdtemp,
-    banded layout partitioned by band) — repeated bench/contract
-    invocations measure the batch-proportional PROBE path, the one a
-    production ingest pays; the corpus decode is a one-time index build,
-    exactly as it is in production."""
-    import os
-    import tempfile
-
+    path+mtime+size plus the fingerprint oracle version, banded layout
+    partitioned by band) — repeated bench/contract invocations measure
+    the batch-proportional PROBE path, the one a production ingest pays;
+    the corpus decode is a one-time index build, exactly as it is in
+    production."""
     from pyanomalydetector2_spark.operators.audio_fp import (
         ORACLE_FP_DIR,
         audio_fingerprints,
@@ -1307,12 +1304,7 @@ def q_audio_near_dup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # above a synth mapInPandas (measured 12.6 s → 2 s at sf0.1)
     new = _audio_corpus(spark, sf, max_id=_INCR_CUT)
 
-    doc_path = os.path.join(sf, "documents.parquet")
-    st = os.stat(doc_path)
-    key = f"{doc_path}:{st.st_mtime_ns}:{st.st_size}:{ORACLE_FP_DIR}"
-    base = _AUDIO_FP_INDEX_CACHE.get(key)
-    if base is None:
-        base = tempfile.mkdtemp(prefix="pyad2_audio_fp_index_")
+    def build(base: str) -> str:
         old = clips.filter(F.col("clip_id") >= _INCR_CUT)
         fp = audio_fingerprints(old, id_col="clip_id").localCheckpoint()
         SnapshotTable(f"{base}/fp").write_snapshot(fp)
@@ -1323,7 +1315,11 @@ def q_audio_near_dup_incremental(spark: SparkSession, sf: str) -> DataFrame:
         SnapshotTable(f"{base}/banded").write_snapshot(
             fp_banded(fp).repartition("band"), partition_by=["band"]
         )
-        _AUDIO_FP_INDEX_CACHE[key] = base
+        return base
+
+    base = _cached_input(
+        "audio_fp_index", sf, "documents", build, ORACLE_FP_DIR
+    )
     index_fp = SnapshotTable(f"{base}/fp").read(spark)
     index_banded = SnapshotTable(f"{base}/banded").read(spark)
     return audio_near_dup_incremental(
@@ -1388,9 +1384,6 @@ def q_audio_trim(spark: SparkSession, sf: str) -> DataFrame:
     Spark decodes the actual WAV bytes and scans frame RMS; the DuckDB
     oracle is the closed-form plant arithmetic — a trim scan that
     misplaces a single frame hash-mismatches."""
-    import os
-    import tempfile
-
     from pyanomalydetector2_spark.operators.audio_fp import (
         audio_trim,
         synth_padded_corpus,
@@ -1402,13 +1395,8 @@ def q_audio_trim(spark: SparkSession, sf: str) -> DataFrame:
     # _audio_corpus — so the measured operator is audio_trim's real
     # decode + RMS scan over a stored clips table (the engine's actual
     # input shape), not the synth+WAV-encode datagen pass.
-    doc_path = os.path.join(sf, "documents.parquet")
-    st = os.stat(doc_path)
-    key = f"{doc_path}:{st.st_mtime_ns}:{st.st_size}"
-    base = _PADDED_CORPUS_CACHE.get(key)
-    if base is None:
+    def build(base: str) -> str:
         docs = load_table(spark, sf, "documents").select("doc_id")
-        base = _cache_tmpdir("pyad2_padded_corpus_")
         # ~200 rows (≈7 MB of WAV payload) per file: bounds the columnar
         # read batch of the binary column (see synth_padded_corpus)
         n_parts = max(
@@ -1417,7 +1405,9 @@ def q_audio_trim(spark: SparkSession, sf: str) -> DataFrame:
         synth_padded_corpus(spark, docs, partitions=n_parts).write.mode(
             "overwrite"
         ).parquet(f"{base}/clips")
-        _PADDED_CORPUS_CACHE[key] = base
+        return base
+
+    base = _cached_input("padded_corpus", sf, "documents", build)
     out = audio_trim(spark.read.parquet(f"{base}/clips"))
     return out.withColumnRenamed("id", "clip_id")
 
@@ -1559,26 +1549,17 @@ def q_audio_ingest_stream(spark: SparkSession, sf: str) -> DataFrame:
     the micro-batch where its later member arrives — so the accumulated
     pair table equals the one-shot audio_near_dup set and the SAME SQL
     oracle applies: a streaming pipeline with a hash-exact correctness
-    gate, not a rows-only smoke check. Fresh mkdtemp state per invocation:
+    gate, not a rows-only smoke check. Fresh state per invocation:
     repeated runs measure the full drain, not a warm cache."""
-    import tempfile
-
     from pyanomalydetector2_spark.streaming.audio_ingest import (
         ingest_audio_stream,
         ingested_pairs,
     )
 
-    import os
-
     # arrival directory: written once per process (it is DATAGEN — the
     # producer's side of the fence), 4 files so AvailableNow drains in 4
     # micro-batches; the timed work is the drain itself
-    doc_path = os.path.join(sf, "documents.parquet")
-    st = os.stat(doc_path)
-    key = f"{doc_path}:{st.st_mtime_ns}:{st.st_size}"
-    src = _INGEST_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="pyad2_ingest_src_")
+    def build(src: str) -> str:
         corpus = _audio_corpus(spark, sf, max_id=_STREAM_CUT).select(
             "clip_id",
             "bytes",
@@ -1587,8 +1568,10 @@ def q_audio_ingest_stream(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(8000).alias("sr_hz"),
         )
         corpus.repartition(4).write.mode("overwrite").parquet(src)
-        _INGEST_SRC_CACHE[key] = src
-    state = tempfile.mkdtemp(prefix="pyad2_ingest_state_")
+        return src
+
+    src = _cached_input("ingest_src", sf, "documents", build)
+    state = _cache_tmpdir("pyad2_ingest_state_")
     ingest_audio_stream(
         spark,
         src,
@@ -1630,9 +1613,6 @@ def q_audio_snippet_search(spark: SparkSession, sf: str) -> DataFrame:
     real codecs; the DuckDB oracle rebuilds both sides' hashes from the
     numpy-precomputed frames table and replays the broadcast-join +
     offset-groupBy algebra in SQL."""
-    import os
-    import tempfile
-
     from pyanomalydetector2_spark.operators.audio_fp import (
         snippet_search,
         synth_snippets,
@@ -1645,25 +1625,20 @@ def q_audio_snippet_search(spark: SparkSession, sf: str) -> DataFrame:
     # the real snippet decode→fingerprint + corpus decode + align, not
     # the query-synthesis pass. ~200 rows/file bounds the binary columnar
     # read batch (see synth_padded_corpus).
-    doc_path = os.path.join(sf, "documents.parquet")
-    st = os.stat(doc_path)
-    key = f"{doc_path}:{st.st_mtime_ns}:{st.st_size}"
-    cached = _SNIPPET_SRC_CACHE.get(key)
-    if cached is None:
+    def build(base: str) -> tuple[str, int]:
         n_corpus = min(
             int(docs.agg(F.max("doc_id")).first()[0]) + 1,
             _SNIPPET_CORPUS_CAP,
         )
-        base = _cache_tmpdir("pyad2_snippet_src_")
         n_parts = max(
             spark.sparkContext.defaultParallelism, docs.count() // 200 + 1
         )
         synth_snippets(
             spark, docs, n_corpus, partitions=n_parts
         ).write.mode("overwrite").parquet(f"{base}/snippets")
-        _SNIPPET_SRC_CACHE[key] = (base, n_corpus)
-        cached = (base, n_corpus)
-    base, n_corpus = cached
+        return base, n_corpus
+
+    base, n_corpus = _cached_input("snippet_src", sf, "documents", build)
     corpus = _audio_corpus(spark, sf, max_id=n_corpus)
     snippets = spark.read.parquet(f"{base}/snippets")
     return snippet_search(corpus, snippets)
@@ -2008,15 +1983,9 @@ def _ss_dims(spark: SparkSession) -> dict[str, DataFrame]:
     }
 
 
-_SS_STATE_CACHE: dict[str, str] = {}
-
-
-def _ss_key(sf: str) -> str:
-    import os
-
-    p = os.path.join(sf, "events.parquet")
-    st = os.stat(p)
-    return f"{p}:{st.st_mtime_ns}:{st.st_size}"
+# newest drained state dir per sf (keyed like _cached_input), read back by
+# the verdicts query
+_SS_STATE_CACHE: dict[tuple, str] = {}
 
 
 def _ss_drain(
@@ -2025,36 +1994,34 @@ def _ss_drain(
 ):
     """Write the derived frame as 3 files and drain it through the
     streaming validator, then assemble the merged-state result.
-    ``reuse=False`` (the drain query) uses fresh mkdtemp state per
+    ``reuse=False`` (the drain query) uses fresh state per
     invocation so repeated runs measure the full drain; ``reuse=True``
     (the verdicts query) reads the newest already-drained state for this
     sf when one exists — the two contract queries check two projections
     of ONE pipeline, and re-draining identical input twice would measure
     nothing new."""
-    import tempfile
-
     from pyanomalydetector2_spark.streaming.suite_stream import (
         run_suite_stream,
         streaming_suite_result,
     )
 
     suite = _ss_suite()
-    key = _ss_key(sf)
+    key = _input_key("ss_state", sf, "events")
     state = _SS_STATE_CACHE.get(key) if reuse else None
     if state is None:
         # the ARRIVAL directory is datagen — the producer's side of the
-        # fence (same convention as the audio ingest's _INGEST_SRC_CACHE):
+        # fence (same convention as the audio ingest's arrival dir):
         # write it once per process per sf; every drain still starts from
         # FRESH state + checkpoint dirs, so repeated runs measure the full
         # drain over the same 3-file backlog
-        src = _SS_SRC_CACHE.get(key)
-        if src is None:
-            src = _cache_tmpdir("pyad2_ss_src_")
+        def build(src: str) -> str:
             _ss_clips_frame(spark, sf, baseline=False).repartition(
                 3
             ).write.mode("overwrite").parquet(src)
-            _SS_SRC_CACHE[key] = src
-        state = tempfile.mkdtemp(prefix="pyad2_ss_state_")
+            return src
+
+        src = _cached_input("ss_src", sf, "events", build)
+        state = _cache_tmpdir("pyad2_ss_state_")
         run_suite_stream(
             spark, src, state, suite, _ss_dims(spark), "ss", _SS_SCHEMA,
             max_files_per_trigger=1, shuffle_partitions=8,

@@ -327,9 +327,11 @@ def dup_clusters(
     """Duplicate-cluster resolution: connected components over near-dup
     pairs — every doc in a component gets cluster_id = the component's
     smallest doc id (the canonical keep-one representative of a dedup
-    pipeline). Two interchangeable engines behind one signature, both
-    reaching the SAME deterministic fixpoint (pytest-proven equal on
-    random and planted long-chain graphs):
+    pipeline). A pair with a NULL end names no doc and is dropped before
+    any engine runs, so a NULL id never joins or labels a component.
+    Two interchangeable engines behind one signature, both reaching the
+    SAME deterministic fixpoint (pytest-proven equal on random and
+    planted long-chain graphs):
 
     - ``algorithm="propagate"`` (default): min-label propagation,
       label(v) ← min(label(v), min_{u∈N(v)} label(u)) — O(diameter)
@@ -349,6 +351,7 @@ def dup_clusters(
     observability for tests and ops. Deterministic fixpoint ⇒
     oracle-checkable (recursive CTE).
     """
+    pairs = pairs.select("id_a", "id_b").dropna()
     if algorithm == "star":
         return _star_components(pairs, max_iter, rounds_out)
     if algorithm != "propagate":
@@ -358,7 +361,7 @@ def dup_clusters(
     # both branches, so an uncached jaccard/decode feed would execute
     # TWICE inside the first checkpoint (measured 2× the feed cost at
     # sf1.0); checkpoint first and the union reads materialized rows
-    pairs = pairs.select("id_a", "id_b").localCheckpoint()
+    pairs = pairs.localCheckpoint()
     # size-adaptive driver funnel (optimization r06): each propagation
     # round is a join + groupBy + checkpoint + convergence probe — ~5
     # fixed-cost jobs — while a SMALL pair set resolves in microseconds
@@ -751,10 +754,9 @@ def near_dup_jaccard_incremental(
     if index_sigs is None:
         old = docs.join(new_docs.select(id_col), id_col, "left_anti")
         index_sigs = minhash_signatures(old, id_col, text_col, k, n)
-    # the jaccard confirm consumes the pair frame three times (two id-set
-    # unions + the intersect join); without a checkpoint the whole index
-    # lineage would be inlined into each copy — cut it once, then persist
-    # the candidate-pruned shingle frame for its three consumers
+    # the pair frame is consumed three times (two id-set unions + the
+    # jaccard join); without a checkpoint the whole index lineage would be
+    # inlined into each copy — cut it once
     pairs = incremental_candidate_pairs(
         index_sigs, new_sigs, bands, rows_per_band, max_bucket_size
     ).localCheckpoint()
@@ -770,7 +772,7 @@ def near_dup_jaccard_incremental(
     cand_docs = docs.join(
         ids.withColumnRenamed("id", id_col), id_col, "semi"
     )
-    sh = shingle_frame(cand_docs, id_col, text_col, n).persist()
+    sh = shingle_frame(cand_docs, id_col, text_col, n)
     j = jaccard_from_shingles(sh, pairs, prune=False)  # already candidate-only
     return j.filter(F.col("jaccard") >= threshold)
 

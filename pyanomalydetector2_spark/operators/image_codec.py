@@ -1,20 +1,16 @@
-"""Real, dependency-free image container codecs: 24-bit BMP and 8-bit PNG.
+"""Dependency-free image container codecs: 24-bit BMP and 8-bit PNG.
 
-The reference treats media payloads as opaque blobs fetched/validated per
-row (data_getter shapes); the round-1 stub declared image decode
-NotImplementedError because no codec *libraries* ship in this container.
-Both formats here need none: BMP is raw little-endian structs + BGR rows,
-PNG is stdlib ``zlib`` + the five scanline filters — so the decode seam in
-``operators/multimodal.py`` becomes REAL for these containers (mirroring
-the WAV/RIFF path in ``operators/audio.py``).
+BMP is raw little-endian structs + BGR rows; PNG is stdlib ``zlib`` + the
+five scanline filters, so neither needs a codec library. Nothing in the
+validation engine calls this module: the engine checks audio clips, and
+the image/video operators that used it were removed as out of scope. It
+stays as a standalone codec with its own tests.
 
-Scope (declared, not hidden): BMP = BITMAPINFOHEADER, 24 bpp, BI_RGB,
-bottom-up or top-down. PNG = 8-bit depth, color types 0/2/4/6,
-non-interlaced. Anything else raises ``UnsupportedImageError`` — the
-caller decides whether to fall back to the deterministic fake.
+Scope: BMP = BITMAPINFOHEADER, 24 bpp, BI_RGB, bottom-up or top-down.
+PNG = 8-bit depth, color types 0/2/4/6, non-interlaced. Anything else
+raises ``UnsupportedImageError``.
 
-Encoders exist so tests and datagen can synthesize real containers
-round-trip (the same pattern as audio.encode_wav).
+Encoders exist so tests can synthesize real containers round-trip.
 """
 
 from __future__ import annotations
@@ -226,50 +222,7 @@ def image_header(payload: bytes) -> tuple[int, int, int]:
                 f"comp={comp}, w={w}, h={h})"
             )
         return w, abs(h), 3
-    if payload[:2] == b"\xff\xd8":
-        return jpeg_header(payload)
     return png_header(payload)
-
-
-def jpeg_header(payload: bytes) -> tuple[int, int, int]:
-    """(width, height, channels) from a JPEG SOF0/SOF1/SOF2 frame header —
-    same profile jpeg_codec.decode_jpeg accepts (baseline/extended
-    sequential/progressive Huffman; other modes raise). Truncated/corrupt
-    streams raise UnsupportedImageError, never struct/index errors."""
-    try:
-        return _jpeg_header_impl(payload)
-    except UnsupportedImageError:
-        raise
-    except (struct.error, IndexError) as e:
-        raise UnsupportedImageError(f"corrupt JPEG header: {e!r}") from e
-
-
-def _jpeg_header_impl(payload: bytes) -> tuple[int, int, int]:
-    if payload[:2] != b"\xff\xd8":
-        raise UnsupportedImageError("not a JPEG payload")
-    pos, n = 2, len(payload)
-    while pos + 3 < n:
-        if payload[pos] != 0xFF:
-            raise UnsupportedImageError("marker expected")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        if marker in (0xC0, 0xC1, 0xC2):
-            h, w = struct.unpack_from(">HH", payload, pos + 3)
-            nc = payload[pos + 7]
-            return w, h, (3 if nc == 3 else nc)
-        if marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                      0xCD, 0xCE, 0xCF):
-            raise UnsupportedImageError(
-                f"SOF{marker - 0xC0}: only baseline/extended-sequential/"
-                "progressive Huffman JPEG is supported"
-            )
-        pos += seglen
-    raise UnsupportedImageError("no SOF marker found")
 
 
 def decode_image(payload: bytes) -> np.ndarray:
@@ -278,8 +231,4 @@ def decode_image(payload: bytes) -> np.ndarray:
         raise UnsupportedImageError("empty payload")
     if payload[:2] == b"BM":
         return decode_bmp(payload)
-    if payload[:2] == b"\xff\xd8":
-        from pyanomalydetector2_spark.operators.jpeg_codec import decode_jpeg
-
-        return decode_jpeg(payload)
     return decode_png(payload)

@@ -213,12 +213,6 @@ def _error_bound(n: int, k: int) -> float:
 # ---------------------------------------------------------------------------
 
 
-def _sketch_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
-    return StructType(
-        [df.schema[c] for c in group_cols] + _STATE_FIELDS
-    )
-
-
 def _rows_to_sketch(pdf: pd.DataFrame, k: int) -> _Sketch:
     """Merge all serialized sketch rows of one group into one state."""
     acc = _Sketch(k)

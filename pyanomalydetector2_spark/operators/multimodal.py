@@ -1,22 +1,10 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed by Arrow-batched ``mapInPandas`` kernels.
+"""Multimodal column plumbing: audio as an opaque binary column with typed
+metadata, processed by Arrow-batched ``mapInPandas`` kernels.
 
-Decode reality map:
-- audio: REAL for pcm_s16le, WAV/RIFF, G.711 (operators/audio.py, g711.py)
-  and FLAC (operators/flac_codec.py, lossless with CRC/MD5 verification);
-  opus/mp3 have REAL container walks (ogg_opus.py, mp3_frames.py) around
-  the declared-fake codec payload;
-- image: REAL for 24-bit BMP, 8-bit PNG (operators/image_codec.py) and
-  baseline/extended-sequential/PROGRESSIVE JPEG (operators/jpeg_codec.py,
-  interop proven both ways vs javax.imageio incl. its progressive
-  writer) — all stdlib+numpy, no codec libraries needed; the remaining
-  container (WebP) falls back to the deterministic fake, clearly
-  separated by container magic, so tests can pin both paths;
-- video: REAL for uncompressed AVI (operators/video_codec.py); h264-class
-  codecs remain STUBBED behind a deterministic fake (no pyav/ffmpeg in
-  this container) — the Spark-side plumbing (schemas, batch iteration,
-  column pruning, 1→N fan-out shapes) is real and tested, and each
-  ``*_kernel`` function is the single seam where a real library plugs in.
+Decode reality map: audio is REAL for pcm_s16le, WAV/RIFF, G.711
+(operators/audio.py, g711.py) and FLAC (operators/flac_codec.py, lossless
+with CRC/MD5 verification); opus/mp3 have REAL container walks
+(ogg_opus.py, mp3_frames.py) around the declared-fake codec payload.
 """
 
 from __future__ import annotations
@@ -27,50 +15,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from pyanomalydetector2_spark.operators.image_codec import (
-    UnsupportedImageError,
-    decode_image,
-    image_header,
-)
-
 AUDIO_FEATURE_SCHEMA = (
     "clip_id string, rms double, peak double, zero_cross_rate double, "
     "n_samples int"
 )
-
-IMAGE_META_SCHEMA = "img_id string, width int, height int, channels int, ok boolean"
-
-FRAME_SAMPLE_SCHEMA = "vid_id string, frame_idx int, frame_bytes binary"
-
-
-# --------------------------------------------------------------- kernels --
-def decode_image_kernel(payload: bytes) -> np.ndarray:
-    """REAL decode for BMP/PNG/JPEG containers (image_codec + jpeg_codec,
-    stdlib+numpy, progressive included); other formats (WebP) raise —
-    this remains the seam where PIL plugs in for those."""
-    try:
-        return decode_image(payload)
-    except UnsupportedImageError as e:
-        raise NotImplementedError(
-            f"no decoder for this container in this environment: {e}"
-        ) from e
-
-
-def fake_image_meta(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic fake decode: derive (w, h, c) from the payload header —
-    stands in for reading the real image header."""
-    if payload is None or len(payload) < 4:
-        return (0, 0, 0)
-    return (64 + payload[0] % 64, 64 + payload[1] % 64, 1 + payload[2] % 4)
-
-
-def _image_meta(payload: bytes) -> tuple[int, int, int]:
-    """Real header parse when the container magic is recognized, else the
-    deterministic fake (synthetic opaque payloads)."""
-    try:
-        return image_header(payload)
-    except UnsupportedImageError:
-        return fake_image_meta(payload)
 
 
 # ------------------------------------------------------------ operators ---
@@ -357,127 +305,3 @@ def audio_container_meta(clips: DataFrame) -> DataFrame:
     return clips.select("clip_id", "bytes", "codec").mapInPandas(
         meta, schema=AUDIO_CONTAINER_SCHEMA
     )
-
-
-def image_metadata(images: DataFrame, id_col: str = "img_id", bytes_col: str = "bytes") -> DataFrame:
-    """Image metadata extraction: REAL header parse for BMP/PNG containers
-    (image_codec), deterministic fake for unrecognized/opaque payloads."""
-
-    def meta(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                w, h, c = _image_meta(payload)
-                rows.append((iid, w, h, c, w > 0))
-            yield pd.DataFrame(
-                rows, columns=["img_id", "width", "height", "channels", "ok"]
-            )
-
-    return images.select(
-        images[id_col].alias(id_col), images[bytes_col].alias(bytes_col)
-    ).mapInPandas(meta, schema=IMAGE_META_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "img_id string, width int, height int, channels int, pixels binary"
-)
-
-
-def fake_decode_array(payload: bytes, w: int, h: int, c: int) -> np.ndarray:
-    """Deterministic fake pixel decode: tile the payload bytes into (h, w, c)
-    uint8 — stands in for a real decoder; everything downstream of this
-    call is real array math."""
-    buf = np.frombuffer(payload, dtype=np.uint8)
-    need = h * w * c
-    reps = need // max(len(buf), 1) + 1
-    return np.tile(buf, reps)[:need].reshape(h, w, c)
-
-
-def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """REAL nearest-neighbor resize (pure numpy index math — no codec
-    dependency): output pixel (i, j) samples input (⌊i·h/out_h⌋, ⌊j·w/out_w⌋)."""
-    h, w = img.shape[:2]
-    ri = (np.arange(out_h) * h // out_h).astype(np.int64)
-    ci = (np.arange(out_w) * w // out_w).astype(np.int64)
-    return img[ri][:, ci]
-
-
-def resize_images(
-    images: DataFrame,
-    out_h: int = 32,
-    out_w: int = 32,
-    id_col: str = "img_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Image resize: REAL decode for BMP/PNG containers + REAL
-    nearest-neighbor resize; unrecognized payloads go through the
-    deterministic fake decode (the declared PIL/libjpeg seam). Emits
-    fixed-shape (out_h × out_w × c) pixel buffers ready for a
-    training-batch collator."""
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    img = decode_image(payload)
-                    h, w, c = img.shape
-                except UnsupportedImageError:
-                    w, h, c = fake_image_meta(payload)
-                    if w == 0:
-                        rows.append((iid, 0, 0, 0, None))
-                        continue
-                    img = fake_decode_array(payload, w, h, c)
-                small = resize_nearest(img, out_h, out_w)
-                rows.append((iid, out_w, out_h, c, small.tobytes()))
-            yield pd.DataFrame(
-                rows, columns=["img_id", "width", "height", "channels", "pixels"]
-            )
-
-    return images.select(
-        images[id_col].alias(id_col), images[bytes_col].alias(bytes_col)
-    ).mapInPandas(kernel, schema=RESIZED_SCHEMA)
-
-
-def sample_frames(
-    videos: DataFrame,
-    every_n: int = 10,
-    id_col: str = "vid_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Video frame sampling: REAL decode for uncompressed AVI containers
-    (operators/video_codec.py — RIFF walker + DIB frames, stdlib-only) —
-    every Nth frame's RGB pixel buffer; unrecognized containers fall back
-    to the fixed-size byte-slice fake (the declared pyav/ffmpeg seam).
-    Either way this demonstrates the 1→N row fan-out shape of frame
-    sampling under mapInPandas."""
-    from pyanomalydetector2_spark.operators.video_codec import (
-        UnsupportedVideoError,
-        parse_avi,
-    )
-
-    frame_sz = 256
-
-    def frames(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for vid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                if payload is None:
-                    continue
-                try:
-                    arr = parse_avi(payload)
-                    for idx in range(0, len(arr), every_n):
-                        rows.append((vid, idx, arr[idx].tobytes()))
-                    continue
-                except UnsupportedVideoError:
-                    pass
-                n_frames = max(len(payload) // frame_sz, 1)
-                for idx in range(0, n_frames, every_n):
-                    rows.append(
-                        (vid, idx, bytes(payload[idx * frame_sz : (idx + 1) * frame_sz]))
-                    )
-            yield pd.DataFrame(rows, columns=["vid_id", "frame_idx", "frame_bytes"])
-
-    return videos.select(
-        videos[id_col].alias(id_col), videos[bytes_col].alias(bytes_col)
-    ).mapInPandas(frames, schema=FRAME_SAMPLE_SCHEMA)

@@ -9,8 +9,6 @@ nesting is assembled on the driver (same shape as the reference's dict).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -55,8 +53,3 @@ def build_report(anomalies: DataFrame, min_hosts: int = 2) -> dict:
             )
         report[f"cluster_{cid}"] = cluster
     return report
-
-
-def report_json(anomalies: DataFrame, min_hosts: int = 2) -> str:
-    """reference reporter.py:74-79 json.dumps."""
-    return json.dumps(build_report(anomalies, min_hosts), sort_keys=True)

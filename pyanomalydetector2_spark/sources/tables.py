@@ -33,10 +33,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
 def events_as_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Project the events table onto the reference's canonical history shape
     ``(itemid, clock, value)`` (models/history.py:10) — user_id keys the

@@ -285,6 +285,27 @@ def test_incremental_near_dup_matches_full_pipeline(spark):
     assert got2 == expected
 
 
+def test_incremental_near_dup_leaves_no_cached_frame(spark):
+    """The candidate shingle frame has one consumer, so the incremental
+    path caches nothing: the session's cache manager is as empty after a
+    call as before it."""
+    from pyanomalydetector2_spark.operators.dedup import (
+        near_dup_jaccard_incremental,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over dog number {i % 10}")
+         for i in range(30)],
+        "doc_id long, text string",
+    )
+    spark.catalog.clearCache()
+    n = near_dup_jaccard_incremental(
+        docs, docs.filter("doc_id < 10"), "doc_id", "text"
+    ).count()
+    assert n > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_incremental_with_persisted_index(spark, tmp_path):
     """The production incremental path end-to-end: the corpus signature
     index lives in a snapshot table across runs — write it, read it back,
@@ -585,6 +606,24 @@ def test_dup_clusters_driver_funnel_equals_distributed(spark):
     }
     assert driver == dist and driver
     assert driver[500] == 500 and driver[1008] == 1007
+
+
+def test_dup_clusters_drops_null_id_pairs(spark):
+    """A pair with a NULL end is dropped before either engine: the driver
+    union-find (default small_cut) and the distributed loop
+    (small_cut=None) return the same components, with no NULL vertex and
+    no singleton for the non-NULL end of a NULL pair."""
+    from pyanomalydetector2_spark.operators.dedup import dup_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (None, 1), (5, None)], "id_a long, id_b long"
+    )
+    for small_cut in (200_000, None):
+        got = sorted(
+            (r["id"], r["cluster_id"])
+            for r in dup_clusters(pairs, small_cut=small_cut).collect()
+        )
+        assert got == [(1, 1), (2, 1), (3, 1)], (small_cut, got)
 
 
 def test_star_components_fixpoint_equals_propagation(spark):

@@ -1,6 +1,4 @@
-"""Real image container codecs (BMP 24-bit, PNG 8-bit, stdlib-only) and
-their wiring into the multimodal operators — the image analog of the
-WAV/RIFF audio decode path."""
+"""Real image container codecs (BMP 24-bit, PNG 8-bit, stdlib-only)."""
 
 from __future__ import annotations
 
@@ -79,36 +77,3 @@ def test_corrupt_payloads_raise_codec_error_not_zlib(tmp_path):
     with pytest.raises(UnsupportedImageError):
         decode_bmp(bytes(bmp32))
 
-
-def test_spark_image_ops_take_the_real_path(spark):
-    """image_metadata / resize_images decode real containers end-to-end;
-    opaque payloads still flow through the declared fake seam."""
-    from pyanomalydetector2_spark.operators.multimodal import (
-        image_metadata,
-        resize_images,
-        resize_nearest,
-    )
-
-    rng = np.random.default_rng(3)
-    bmp_img = rng.integers(0, 256, (40, 24, 3), dtype=np.uint8)
-    png_img = rng.integers(0, 256, (17, 31, 4), dtype=np.uint8)
-    rows = [
-        ("bmp", encode_bmp(bmp_img)),
-        ("png", encode_png(png_img, filter_type=4)),
-        ("opaque", bytes([10, 20, 30, 40] * 300)),
-        ("none", None),
-    ]
-    imgs = spark.createDataFrame(rows, "img_id string, bytes binary")
-
-    meta = {r.img_id: r for r in image_metadata(imgs).collect()}
-    assert (meta["bmp"].width, meta["bmp"].height, meta["bmp"].channels) == (24, 40, 3)
-    assert (meta["png"].width, meta["png"].height, meta["png"].channels) == (31, 17, 4)
-    assert meta["opaque"].ok  # fake path still live for unknown containers
-    assert not meta["none"].ok
-
-    out = {r.img_id: r for r in resize_images(imgs, 8, 8).collect()}
-    got = np.frombuffer(out["bmp"].pixels, dtype=np.uint8).reshape(8, 8, 3)
-    assert np.array_equal(got, resize_nearest(bmp_img, 8, 8))
-    got = np.frombuffer(out["png"].pixels, dtype=np.uint8).reshape(8, 8, 4)
-    assert np.array_equal(got, resize_nearest(png_img, 8, 8))
-    assert out["none"].pixels is None
